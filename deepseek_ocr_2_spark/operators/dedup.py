@@ -42,7 +42,7 @@ from pyspark.sql.types import (
     StructType,
 )
 from ..functions import textstats
-from .relational import load
+from .relational import alnum_tokens, load
 
 JACCARD_THRESHOLD = 0.8
 NUM_PERM = 128
@@ -77,44 +77,27 @@ def shingle_df_cap(n_docs: int) -> int:
     return max(MAX_SHINGLE_DF, int(n_docs * SHINGLE_DF_FRAC))
 
 
-def _shingled(docs: DataFrame, distinct: bool = True) -> DataFrame:
-    """(doc_id, shingle) word-3-gram pairs, all JVM-side.
+def _shingle_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, shs, n): each doc's word-3-gram array and its distinct
+    shingle count, one narrow projection over the token array.
 
-    Shingles are built with an array ``transform`` over the token array
-    (one narrow projection) instead of posexplode + window LEAD — no
-    shuffle and no per-token row blow-up before the explode, which at
-    corpus scale is the difference between one pass and a sort.
-
-    ``distinct=False`` skips the dedup exchange for callers that dedup
-    inside their own aggregation anyway (``collect_set`` in
-    ``ngram_jaccard_pairs``) — one shuffle instead of two.
-
-    ``explode_outer``, deliberately (round 7): for plain ``explode``
-    Spark's InferFiltersFromGenerate adds ``size(g) > 0 AND
-    isnotnull(g)`` below the Generate, and filter pushdown then INLINES
-    the whole shingle ``transform`` — with the tokenizer regex
-    re-expanded per element access — into a Filter evaluated per input
-    row at the scan (measured: the inferred filter alone was ~10x the
-    cost of the real shingling at bench scale).  The filter guards
-    against empty/null generator arrays, which cannot occur here (every
-    ``size(t) >= 3`` doc yields >= 1 shingle), so the outer variant is
-    row-identical and skips the inference."""
-    toks = docs.select(
-        "doc_id",
-        F.regexp_extract_all(
-            F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0
-        ).alias("t"),
-    )
-    out = toks.filter(F.size("t") >= 3).select(
-        "doc_id",
-        F.explode_outer(
+    The regex runs once per row: ``slice(t, 1, greatest(size(t)-2, 0))``
+    keeps every shingle start in bounds (no ANSI index error), so docs
+    under 3 tokens get an empty array instead of needing a
+    ``size(t) >= 3`` Filter — which Catalyst would push below the
+    projection (and the scan fan-out) with a second copy of the regex.
+    ``n`` is per document, computed before any caller explodes."""
+    return (
+        docs.select("doc_id", alnum_tokens(F.col("text")).alias("t"))
+        .select(
+            "doc_id",
             F.expr(
-                "transform(sequence(0, size(t)-3),"
-                " i -> concat(t[i], ' ', t[i+1], ' ', t[i+2]))"
-            )
-        ).alias("shingle"),
+                "transform(slice(t, 1, greatest(size(t) - 2, 0)),"
+                " (x, i) -> concat(x, ' ', t[i + 1], ' ', t[i + 2]))"
+            ).alias("shs"),
+        )
+        .select("doc_id", "shs", F.size(F.array_distinct("shs")).alias("n"))
     )
-    return out.distinct() if distinct else out
 
 
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -142,33 +125,18 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     df_cap = shingle_df_cap(parquet_row_count(sf_dir, "documents"))
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = docs.select(
-        "doc_id",
-        F.regexp_extract_all(
-            F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0
-        ).alias("t"),
-    )
     # per-(doc, shingle) dedup happens INSIDE the posting-list
     # aggregation (collect_set of structs), so the corpus shuffles once
-    # (on shingle); ``n`` is a pure per-row function of the token array.
-    # explode_outer for the same reason as _shingled: the arrays are
-    # provably non-empty, and plain explode's inferred size/notnull
-    # filter re-expands the shingle transform (regex included) into a
-    # per-row scan-side Filter.
+    # (on shingle).  explode_outer, deliberately: plain explode's
+    # InferFiltersFromGenerate adds ``size(shs) > 0`` below the
+    # Generate, and pushdown then inlines the shingle transform (regex
+    # included) into a per-row scan-side Filter.  Docs with no shingle
+    # (under 3 tokens, null text) explode to one null row, dropped above
+    # the Generate.
     sh = (
-        toks.filter(F.size("t") >= 3)
-        .select(
-            "doc_id",
-            F.expr(
-                "transform(sequence(0, size(t)-3),"
-                " i -> concat(t[i], ' ', t[i+1], ' ', t[i+2]))"
-            ).alias("shs"),
-        )
-        .select(
-            "doc_id",
-            F.size(F.array_distinct("shs")).alias("n"),
-            F.explode_outer("shs").alias("shingle"),
-        )
+        _shingle_sets(docs)
+        .select("doc_id", "n", F.explode_outer("shs").alias("shingle"))
+        .filter(F.col("shingle").isNotNull())
     )
     grouped = sh.groupBy("shingle").agg(
         F.sort_array(F.collect_set(F.struct("doc_id", "n"))).alias("ds")
@@ -328,35 +296,16 @@ def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     cands = minhash_lsh_candidates(spark, sf_dir)
-    # Verify via per-doc distinct-shingle ARRAYS (round 7, guide
-    # §2.3/§2.4): the shingle set of a doc is a pure per-row function of
-    # its token array, so it is built as a narrow projection (no explode,
-    # no shuffle, no persist) and joined to the candidate pairs by doc
-    # id.  ``size(array_intersect(sa, sb))`` over two distinct arrays is
-    # exactly the shared-shingle count the round-6 (doc, shingle)
-    # exploded join + groupBy computed — but with one row per doc
-    # instead of one per shingle, two fewer aggregations, and two fewer
-    # joins (the per-doc counts come free as ``size()``).
-    sets = (
-        docs.select(
-            "doc_id",
-            F.regexp_extract_all(
-                F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0
-            ).alias("t"),
-        )
-        .filter(F.size("t") >= 3)
-        .select(
-            "doc_id",
-            F.array_distinct(
-                F.expr(
-                    "transform(sequence(0, size(t)-3),"
-                    " i -> concat(t[i], ' ', t[i+1], ' ', t[i+2]))"
-                )
-            ).alias("shs"),
-        )
-    )
-    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("shs").alias("sa"))
-    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("shs").alias("sb"))
+    # Verify via per-doc shingle ARRAYS (round 7, guide §2.3/§2.4): the
+    # shingle set of a doc is a pure per-row function of its token
+    # array, so it is a narrow projection (no explode, no shuffle, no
+    # persist) joined to the candidate pairs by doc id.
+    # ``size(array_intersect(sa, sb))`` is the distinct shared-shingle
+    # count, and ``n`` the distinct per-doc count — one row per doc
+    # instead of one per shingle.
+    sets = _shingle_sets(docs)
+    sa = sets.toDF("doc_a", "sa", "na")
+    sb = sets.toDF("doc_b", "sb", "nb")
     return (
         cands.join(sa, "doc_a")
         .join(sb, "doc_b")
@@ -364,8 +313,8 @@ def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a",
             "doc_b",
             F.size(F.array_intersect("sa", "sb")).alias("inter"),
-            F.size("sa").alias("na"),
-            F.size("sb").alias("nb"),
+            "na",
+            "nb",
         )
         .withColumn(
             "jaccard",

@@ -133,23 +133,6 @@ class ExtractConfig:
     # gate the raw model output column (reference S8/F4) — off by
     # default: at 100 TB the raw strings roughly double output bytes
     include_raw_output: bool = False
-    # Kernel-stage fan-out (guide §2.5, round-7 investigation).  When
-    # set, the payload exchange gets
-    # ``max(shuffle_parts, num_buckets // buckets_per_partition)``
-    # partitions (capped at num_buckets) instead of the default
-    # ``min(num_buckets, shuffle_parts)``.  Rationale: hashing many
-    # buckets into exactly the session parallelism concentrates
-    # (measured: largest of 32 partitions carries 1.256x the mean bytes
-    # from 1024 buckets, and in a one-wave schedule on DEDICATED cores
-    # that excess is the stage wall; 16 buckets/partition = two waves
-    # cuts the greedy makespan to 1.062x ideal).  Left None by default
-    # because the win only exists when tasks map 1:1 onto real cores:
-    # every extra mapInPandas task costs ~5-14 ms (measured, trivial
-    # kernel), and on oversubscribed hosts the OS multiplexes tasks so
-    # imbalance hides while overhead remains — measured there the
-    # fan-out is a ~4-8% LOSS.  Set ~16 on clusters with dedicated
-    # executor cores; leave None when CPU is shared.
-    buckets_per_partition: Optional[int] = None
 
 
 _COLUMNS = (
@@ -364,18 +347,11 @@ def extract_pages(
         shuffle_parts = int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
         )
-        # Partition count: see the ``buckets_per_partition`` note on
-        # ExtractConfig — one wave at the session parallelism by
-        # default; opt-in multi-wave fan-out for dedicated-core
-        # clusters where bucket-assignment skew, not per-task overhead,
-        # sets the stage wall.
-        if cfg.buckets_per_partition:
-            nparts = max(
-                shuffle_parts, cfg.num_buckets // cfg.buckets_per_partition
-            )
-        else:
-            nparts = shuffle_parts
-        narrow = narrow.repartition(min(cfg.num_buckets, nparts), "bucket")
+        # one wave at the session parallelism: a multi-wave fan-out
+        # measured as a pure per-task-overhead loss on shared cores
+        narrow = narrow.repartition(
+            min(cfg.num_buckets, shuffle_parts), "bucket"
+        )
     schema = (
         EXTRACT_SCHEMA_WITH_RAW if cfg.include_raw_output else EXTRACT_SCHEMA
     )

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.textstats import WORD_RE
+
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read a table, fanning out under-split small inputs (round 7).
@@ -36,6 +38,13 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     par = adaptive_scan_partitions(spark, sf_dir, name)
     return df.repartition(par) if par else df
+
+
+def alnum_tokens(text: F.Column) -> F.Column:
+    """Lowercase alnum token array — the Spark twin of
+    ``textstats.tokenize``, so SQL shingles and the Python kernels
+    (MinHash, SimHash) always share one token rule."""
+    return F.regexp_extract_all(F.lower(text), F.lit(WORD_RE.pattern), 0)
 
 
 def _cents(col: F.Column) -> F.Column:
@@ -971,13 +980,7 @@ def posexplode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         F.posexplode(
-            F.slice(
-                F.regexp_extract_all(
-                    F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0
-                ),
-                1,
-                5,
-            )
+            F.slice(alnum_tokens(F.col("text")), 1, 5)
         ).alias("pos", "token"),
     )
     return (

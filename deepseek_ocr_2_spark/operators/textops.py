@@ -24,7 +24,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions import textstats
-from .relational import load
+from .relational import alnum_tokens, load
 
 
 def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -33,9 +33,7 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("ws_tokens"),
-        F.size(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
-        ).alias("alnum_tokens"),
+        F.size(alnum_tokens(F.col("text"))).alias("alnum_tokens"),
     )
 
 
@@ -274,7 +272,7 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     Decision rule (identical to ``textstats.detect_language``):
     empty text -> 'und'; >=5 CJK chars or >5% CJK ratio -> 'zh'; else
     argmax of per-language stopword-occurrence votes over the
-    ``[a-z0-9]+`` token stream, alphabetically-first on ties, 'und'
+    ``alnum_tokens`` stream, alphabetically-first on ties, 'und'
     when no language scores a single vote.
     """
     docs = load(spark, sf_dir, "documents").select("doc_id", "text", "lang")
@@ -284,9 +282,7 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang").alias("lang_stored"),
         F.length(text).alias("n"),
         F.size(F.regexp_extract_all(text, F.lit(_CJK_CLASS), 0)).alias("cjk"),
-        F.regexp_extract_all(
-            F.lower(text), F.lit("[a-z0-9]+"), 0
-        ).alias("toks"),
+        alnum_tokens(text).alias("toks"),
     )
     votes = {
         lang: F.size(

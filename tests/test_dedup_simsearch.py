@@ -37,6 +37,34 @@ def test_minhash_lsh_finds_every_exact_pair(spark, exact_pairs):
     assert all(j >= dedup.JACCARD_THRESHOLD for j in lsh.values())
 
 
+def test_shingle_sets_match_python_shingles(spark):
+    """The shared SQL shingle helper agrees with word-3-grams built from
+    ``textstats.tokenize`` — including docs under 3 tokens (empty array,
+    no out-of-bounds index under ANSI mode) and repeated shingles
+    (``shs`` keeps them, ``n`` counts distinct ones)."""
+    texts = {
+        1: None,
+        2: "",
+        3: "One",
+        4: "one, TWO",
+        5: "one two three",
+        6: "a b c a b c a",
+        7: "x-y_z 42 x y z",
+    }
+    df = spark.createDataFrame(
+        list(texts.items()), "doc_id bigint, text string"
+    )
+    got = {r.doc_id: (r.shs, r.n) for r in dedup._shingle_sets(df).collect()}
+    assert got[1] == (None, None)
+    for doc_id, text in texts.items():
+        if text is None:
+            continue
+        t = textstats.tokenize(text)
+        want = [" ".join(t[i:i + 3]) for i in range(len(t) - 2)]
+        assert got[doc_id] == (want, len(set(want))), (doc_id, got[doc_id])
+    assert got[6] == (["a b c", "b c a", "c a b", "a b c", "b c a"], 3)
+
+
 def test_simhash_pairs_respect_hamming_bound(spark):
     rows = dedup.simhash_near_dups(spark, SF_SMALL).collect()
     assert len(rows) > 0

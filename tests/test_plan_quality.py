@@ -56,12 +56,9 @@ def test_token_count_prunes_to_two_columns(spark):
 
 def test_extract_fanout_knob_partition_counts(spark):
     """Find 4 (r07): the payload-exchange partition count is ONE wave at
-    the session parallelism by default (unchanged r06 behavior — on
-    oversubscribed hosts fan-out measured as a pure per-task-overhead
-    loss), and the opt-in ``buckets_per_partition`` knob fans a
-    many-bucket config out to ``num_buckets // knob`` partitions for
-    dedicated-core clusters where bucket-assignment skew sets the
-    stage wall."""
+    the session parallelism (on oversubscribed hosts a multi-wave
+    fan-out measured as a pure per-task-overhead loss), never more
+    partitions than buckets."""
     pages = C.build_corpus(spark, SF_TINY)
     shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -74,18 +71,11 @@ def test_extract_fanout_knob_partition_counts(spark):
         return int(m.group(1))
 
     base = dict(static_hot_hosts=("big.example-news.com",))
-    # default: min(num_buckets, shuffle_parts) — exactly the r06 shape
+    # min(num_buckets, shuffle_parts) — exactly the r06 shape
     assert repart_n(ExtractConfig(num_buckets=1024, **base)) == min(
         1024, shuffle_parts
     )
-    # knob: >= num_buckets // knob partitions, still capped at buckets
-    assert repart_n(
-        ExtractConfig(num_buckets=1024, buckets_per_partition=16, **base)
-    ) == min(1024, max(shuffle_parts, 64))
-    # tiny bucket counts are never fanned past the bucket count
-    assert repart_n(
-        ExtractConfig(num_buckets=4, buckets_per_partition=16, **base)
-    ) == 4
+    assert repart_n(ExtractConfig(num_buckets=4, **base)) == 4
 
 
 def test_extract_shuffles_payload_exactly_once_and_narrow(spark):
@@ -296,12 +286,54 @@ def test_ngram_posting_lists_single_shuffle(spark):
     from deepseek_ocr_2_spark.operators.relational import load
 
     docs = load(spark, SF_SMALL, "documents").select("doc_id", "text")
-    grouped = dedup._shingled(docs, distinct=False).groupBy("shingle").agg(
-        F.sort_array(F.collect_set("doc_id")).alias("ds")
+    grouped = (
+        dedup._shingle_sets(docs)
+        .select("doc_id", F.explode_outer("shs").alias("shingle"))
+        .groupBy("shingle")
+        .agg(F.sort_array(F.collect_set("doc_id")).alias("ds"))
     )
     plan = formatted_plan(grouped)
     tree = plan.split("== Physical Plan ==")[-1].split("\n\n(1)")[0]
     assert tree.count("Exchange") == 1, tree
+
+
+@pytest.mark.parametrize(
+    "query, n_regex, n_explodes",
+    [("ngram_jaccard_pairs", 1, 1), ("minhash_lsh_dedup", 2, 0)],
+)
+def test_shingle_tokenizer_regex_runs_once_per_row(
+    spark, query, n_regex, n_explodes
+):
+    """The tokenizer regex is evaluated once per input row (once per
+    join side for the MinHash verify), never re-expanded into a Filter
+    below the shingle projection, and the per-doc distinct-shingle
+    count ``n`` is projected BELOW any Generate — once per document,
+    not once per exploded shingle row."""
+    from deepseek_ocr_2_spark.operators import dedup
+
+    plan = formatted_plan(getattr(dedup, query)(spark, SF_SMALL))
+    details = plan.split("\n\n(1)", 1)[1]
+    assert details.count("regexp_extract_all") == n_regex, plan
+    assert not any(
+        "regexp_extract_all" in line
+        for line in details.splitlines()
+        if line.startswith("Condition :")
+    ), plan
+    n_ops = [
+        int(m.group(1))
+        for m in re.finditer(
+            r"^\((\d+)\) Project.*\n.*size\(array_distinct\(", details, re.M
+        )
+    ]
+    shingle_gens = [
+        int(g)
+        for g in re.findall(
+            r"^\((\d+)\) Generate.*\n.*\n.*explode\(shs", details, re.M
+        )
+    ]
+    assert len(n_ops) == n_regex and len(shingle_gens) == n_explodes, plan
+    # operator ids are numbered bottom-up: "below" is a smaller id
+    assert all(op < g for op in n_ops for g in shingle_gens), plan
 
 
 def test_registered_flagship_prunes_doc_json(spark):
