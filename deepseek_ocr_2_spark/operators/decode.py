@@ -20,9 +20,9 @@ pages, so the engine choice is a config knob:
 
 Micro-batch packing uses the visual-token cost model
 (``functions/tiling.py``): pages are packed greedily until the batch's
-estimated visual tokens reach ``max_batch_visual_tokens``, the Spark
-analog of vLLM's ``max_num_seqs`` budget — it keeps per-call latency
-and executor memory bounded regardless of page-size mix.
+estimated visual tokens reach ``DEFAULT_MAX_BATCH_VISUAL_TOKENS``, the
+Spark analog of vLLM's ``max_num_seqs`` budget — it keeps per-call
+latency and executor memory bounded regardless of page-size mix.
 """
 
 from __future__ import annotations
@@ -43,9 +43,9 @@ DEFAULT_MAX_BATCH_VISUAL_TOKENS = 100 * 1120
 
 @dataclass(frozen=True)
 class PageTask:
-    """One page to decode: identity + geometry + payload slice."""
+    """One page to decode: page index + geometry + payload slice (no doc
+    key: ``decode_pages`` keeps task order, callers match by position)."""
 
-    url: str
     page_index: int
     width: int
     height: int
@@ -60,11 +60,12 @@ DecodeBatchFn = Callable[[Sequence[PageTask]], List[str]]
 
 
 def parse_pdf_payload(blob: bytes) -> List[PageTask]:
-    """``%PDF-STUB1`` payload -> page tasks (url filled by the caller).
+    """``%PDF-STUB1`` payload -> page tasks, in page order.
 
-    Raises ``ValueError`` on any malformed page (non-string raw_output,
-    missing/non-numeric dims) so the caller can emit a failure row —
-    malformed payloads must never escape as task-killing TypeErrors.
+    Raises ``ValueError`` on a malformed body (not UTF-8 JSON, not an
+    object) or page (non-string raw_output), and ``KeyError``/
+    ``TypeError``/``OverflowError`` on missing or non-numeric dims; the
+    kernel turns each into a failure row, never a task kill.
     """
     if not blob.startswith(PDF_MAGIC):
         raise ValueError("not a stub PDF payload")
@@ -72,6 +73,8 @@ def parse_pdf_payload(blob: bytes) -> List[PageTask]:
         doc = json.loads(blob[len(PDF_MAGIC):].decode("utf-8"))
     except UnicodeDecodeError as exc:
         raise ValueError(f"undecodable payload body: {exc}") from exc
+    if not isinstance(doc, dict):
+        raise ValueError(f"payload body is {type(doc).__name__}, not an object")
     tasks = []
     for i, p in enumerate(doc.get("pages", [])):
         raw = p["raw_output"]
@@ -79,7 +82,6 @@ def parse_pdf_payload(blob: bytes) -> List[PageTask]:
             raise ValueError(f"page {i}: raw_output is {type(raw).__name__}")
         tasks.append(
             PageTask(
-                url="",
                 page_index=i,
                 width=int(p["width"]),
                 height=int(p["height"]),

@@ -5,7 +5,7 @@ Spark lifecycle (SURVEY §3, one stage per boundary)::
     read input table
       -> (narrow) host/payload-type columns, JVM-side
       -> repartition(url-hash bucket, salted for giant hosts)   [only wide op]
-      -> mapInPandas(extract_kernel)                            [Arrow batches]
+      -> extract_kernel_stage: mapInPandas(extract_kernel)      [Arrow batches]
       -> output DataFrame (url, extracted_text, spans, lang, ...)
 
 Routing happens *inside* one vectorized kernel (north-star: "a single
@@ -29,16 +29,17 @@ Scale notes (designed for ~100 TB / 10^12 docs, tested on local[32]):
 * Pages of one document never split across partitions (they live in one
   payload blob), so per-url output is independent of partitioning —
   byte-identical at local[8] and local[32] and on any real cluster.
-* The incomplete-page filter (reference F2, ``routers/ocr.py:332-335``)
-  drops pages whose raw output lacks the EOS marker; dropped pages are
-  counted per-document (``failed_pages``) and rolled into the metrics
-  table by ``plans/pipeline.py``.
+* The incomplete-page filter (reference F2 with ``skip_repeat`` on,
+  ``routers/ocr.py:332-335``) always drops pages whose raw output lacks
+  the EOS marker; dropped pages are counted per-document
+  (``failed_pages``) and rolled into the metrics table by
+  ``plans/pipeline.py``.
 """
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass, field
+from itertools import islice
 from typing import Iterator, List, Optional
 
 import pandas as pd
@@ -59,10 +60,8 @@ from ..functions.assemble import PAGE_SEPARATOR, process_page
 from ..functions.htmlmain import extract_main_content
 from ..functions.refparse import has_eos
 from .decode import (
-    DEFAULT_MAX_BATCH_VISUAL_TOKENS,
     PDF_MAGIC,
     DecodeBatchFn,
-    PageTask,
     decode_pages,
     parse_pdf_payload,
     stub_decode_batch,
@@ -126,9 +125,6 @@ class ExtractConfig:
     num_buckets: int = 256
     hot_host_threshold: int = 20
     static_hot_hosts: Optional[tuple] = None
-    max_batch_visual_tokens: int = DEFAULT_MAX_BATCH_VISUAL_TOKENS
-    skip_incomplete_pages: bool = True  # reference skip_repeat default
-    page_separator: str = PAGE_SEPARATOR
     decode_batch: DecodeBatchFn = field(default=stub_decode_batch)
     # gate the raw model output column (reference S8/F4) — off by
     # default: at 100 TB the raw strings roughly double output bytes
@@ -197,56 +193,41 @@ def _extract_pdf_rows(
     All pages of every doc in the batch are flattened into one task list
     and cost-packed together, so decode batches stay full even when docs
     are short — the Spark analog of vLLM continuous batching across
-    requests (``engine/inference.py:390-414``).
+    requests (``engine/inference.py:390-414``).  ``decode_pages`` returns
+    results in task order, so each row takes the next ``len(pages)``
+    results: docs are matched by position, never by url (the input does
+    not guarantee url uniqueness — re-crawls).
     """
-    # Docs are tracked by ROW index, not url: the input table does not
-    # guarantee url uniqueness (re-crawls), and keying by url would
-    # merge two rows' pages into both outputs.  PageTask.url carries
-    # the row key through decode; the emitted row keeps the real url.
-    tasks: List[PageTask] = []
-    doc_meta = {}
-    for ridx, (url, payload, lang) in enumerate(rows):
+    parsed = []  # per row: its page tasks, or the exception parsing raised
+    tasks = []
+    for _url, payload, _lang in rows:
         try:
             pages = parse_pdf_payload(payload)
-        except (ValueError, json.JSONDecodeError, KeyError, TypeError) as exc:
-            doc_meta[ridx] = {"lang": lang, "pages": [], "error": str(exc)}
-            continue
-        doc_meta[ridx] = {"lang": lang, "pages": [], "error": None}
-        for p in pages:
-            tasks.append(
-                PageTask(
-                    url=str(ridx),
-                    page_index=p.page_index,
-                    width=p.width,
-                    height=p.height,
-                    payload=p.payload,
-                )
-            )
+        except (ValueError, KeyError, TypeError, OverflowError) as exc:
+            pages = exc
+        else:
+            tasks.extend(pages)
+        parsed.append(pages)
 
-    decoded = decode_pages(tasks, cfg.decode_batch, cfg.max_batch_visual_tokens)
-    for task, raw in decoded:
-        doc_meta[int(task.url)]["pages"].append((task, raw))
-
-    for ridx, (url, payload, lang) in enumerate(rows):
-        meta = doc_meta[ridx]
-        if meta["error"] is not None:
+    decoded = iter(decode_pages(tasks, cfg.decode_batch))
+    for (url, _payload, lang), pages in zip(rows, parsed):
+        if isinstance(pages, Exception):
             out.add(
                 url, None, [], lang, "pdf", 0, 0, 0, False,
-                f"payload_parse: {meta['error']}",
+                f"payload_parse: {pages}",
             )
             continue
-        pages = sorted(meta["pages"], key=lambda tr: tr[0].page_index)
         markdowns: List[str] = []
         raws: List[str] = []
         spans: List[dict] = []
         failed = 0
         est_tokens = 0
-        for task, raw in pages:
+        for task, raw in islice(decoded, len(pages)):
             est_tokens += task.est_visual_tokens
             raws.append(raw)  # raw keeps even EOS-filtered pages (S8/F4)
             # Reference F2: a page without the EOS marker hit max_tokens
-            # and is dropped when skip_repeat is on.
-            if cfg.skip_incomplete_pages and not has_eos(raw):
+            # and is dropped (skip_repeat).
+            if not has_eos(raw):
                 failed += 1
                 continue
             md, elements = process_page(raw, task.width, task.height, task.page_index)
@@ -258,7 +239,7 @@ def _extract_pdf_rows(
         ok = bool(markdowns) or not pages
         out.add(
             url,
-            cfg.page_separator.join(markdowns) if ok else None,
+            PAGE_SEPARATOR.join(markdowns) if ok else None,
             spans,
             lang,
             "pdf",
@@ -267,7 +248,7 @@ def _extract_pdf_rows(
             est_tokens,
             ok,
             None if ok else "no_complete_pages",
-            raw=cfg.page_separator.join(raws) if raws else None,
+            raw=PAGE_SEPARATOR.join(raws) if raws else None,
         )
 
 
@@ -297,13 +278,11 @@ def make_extract_kernel(cfg: ExtractConfig):
     return kernel
 
 
-def with_partition_key(
-    df: DataFrame, cfg: ExtractConfig, hot_hosts: Optional[DataFrame] = None
-) -> DataFrame:
+def with_partition_key(df: DataFrame, cfg: ExtractConfig) -> DataFrame:
     """Attach ``host`` + salted ``bucket`` columns (all JVM-side).
 
-    ``hot_hosts``: optional precomputed single-column (host) DataFrame;
-    when None it is derived from ``df`` itself via a pruned count.
+    Hot hosts are ``cfg.static_hot_hosts`` when set, else derived from
+    ``df`` itself via a pruned host count.
     """
     df = df.withColumn(
         "host", F.lower(F.regexp_extract(F.col("url"), HOST_REGEX, 1))
@@ -311,14 +290,13 @@ def with_partition_key(
     if cfg.static_hot_hosts is not None:
         is_hot = F.col("host").isin(list(cfg.static_hot_hosts))
     else:
-        if hot_hosts is None:
-            hot_hosts = (
-                df.groupBy("host")
-                .agg(F.count(F.lit(1)).alias("host_docs"))
-                .filter(F.col("host_docs") > cfg.hot_host_threshold)
-                .select("host")
-            )
-        hot = hot_hosts.withColumn("is_hot_flag", F.lit(True))
+        hot = (
+            df.groupBy("host")
+            .agg(F.count(F.lit(1)).alias("host_docs"))
+            .filter(F.col("host_docs") > cfg.hot_host_threshold)
+            .select("host")
+            .withColumn("is_hot_flag", F.lit(True))
+        )
         df = df.join(F.broadcast(hot), "host", "left")
         is_hot = F.col("is_hot_flag").isNotNull()
     key = F.when(is_hot, F.xxhash64(F.col("url"))).otherwise(
@@ -329,10 +307,18 @@ def with_partition_key(
     ).drop("is_hot_flag")
 
 
+def extract_kernel_stage(narrow: DataFrame, cfg: ExtractConfig) -> DataFrame:
+    """(url, html, lang) rows -> extraction results.  The one kernel stage
+    of both ``extract_pages`` and ``streaming.ingest.extract_stream``, so
+    the schema always matches ``cfg.include_raw_output``."""
+    schema = (
+        EXTRACT_SCHEMA_WITH_RAW if cfg.include_raw_output else EXTRACT_SCHEMA
+    )
+    return narrow.mapInPandas(make_extract_kernel(cfg), schema=schema)
+
+
 def extract_pages(
-    df: DataFrame,
-    cfg: Optional[ExtractConfig] = None,
-    repartition: bool = True,
+    df: DataFrame, cfg: Optional[ExtractConfig] = None
 ) -> DataFrame:
     """pages table -> extraction results (north-star output schema + QA cols).
 
@@ -342,19 +328,12 @@ def extract_pages(
     """
     cfg = cfg or ExtractConfig()
     keyed = with_partition_key(df, cfg)
-    narrow = keyed.select("url", "html", "lang", "bucket")
-    if repartition:
-        shuffle_parts = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        # one wave at the session parallelism: a multi-wave fan-out
-        # measured as a pure per-task-overhead loss on shared cores
-        narrow = narrow.repartition(
-            min(cfg.num_buckets, shuffle_parts), "bucket"
-        )
-    schema = (
-        EXTRACT_SCHEMA_WITH_RAW if cfg.include_raw_output else EXTRACT_SCHEMA
+    shuffle_parts = int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
-    return narrow.drop("bucket").mapInPandas(
-        make_extract_kernel(cfg), schema=schema
+    # one wave at the session parallelism: a multi-wave fan-out
+    # measured as a pure per-task-overhead loss on shared cores
+    narrow = keyed.select("url", "html", "lang", "bucket").repartition(
+        min(cfg.num_buckets, shuffle_parts), "bucket"
     )
+    return extract_kernel_stage(narrow.drop("bucket"), cfg)

@@ -3,9 +3,10 @@
 The reference ingests via an HTTP upload queue drained by async workers
 (``deepseek_ocr2_api/task_manager.py:263-640``).  The Spark-native
 equivalent is a file-source stream: crawl batches land as parquet files
-in a drop directory; ``readStream`` discovers them, the same extraction
-kernel processes them (identical per-url bytes as the batch path — the
-kernel is a pure function of the row), and ``writeStream`` commits
+in a drop directory; ``readStream`` discovers them, the batch path's own
+kernel stage (``operators.extract.extract_kernel_stage``) processes them
+(identical per-url bytes and columns as the batch path — the kernel is
+a pure function of the row), and ``writeStream`` commits
 exactly-once via its checkpoint, replacing the reference's mutable
 task-index JSON with source offsets + sink commit log.
 
@@ -33,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.extract import EXTRACT_SCHEMA, ExtractConfig, make_extract_kernel
+from ..operators.extract import ExtractConfig, extract_kernel_stage
 from ..sources.corpus import CORPUS_SCHEMA
 
 
@@ -115,15 +116,16 @@ def read_page_stream(spark: SparkSession, drop_dir: str) -> DataFrame:
 
 
 def extract_stream(pages: DataFrame, cfg: Optional[ExtractConfig] = None) -> DataFrame:
-    """Streaming flavor of ``extract_pages``: same kernel, same schema.
+    """Streaming flavor of ``extract_pages``: the same kernel stage, so
+    the same schema (``raw_output`` included when the config asks).
 
-    No pre-repartition: micro-batches are already file-sized; the
-    kernel routes HTML/PDF rows identically to the batch path, so
-    per-url output bytes match the batch pipeline exactly.
+    No pre-repartition: micro-batches are already file-sized, and the
+    kernel is a pure function of the row, so per-url output bytes match
+    the batch pipeline exactly.
     """
-    cfg = cfg or ExtractConfig()
-    narrow = pages.select("url", "html", "lang")
-    return narrow.mapInPandas(make_extract_kernel(cfg), schema=EXTRACT_SCHEMA)
+    return extract_kernel_stage(
+        pages.select("url", "html", "lang"), cfg or ExtractConfig()
+    )
 
 
 def start_extraction_stream(

@@ -31,7 +31,8 @@ def kernel_golden(payload: bytes) -> str | None:
                 continue
             md, _ = process_page(p["raw_output"], p["width"], p["height"], i)
             mds.append(md)
-        return PAGE_SEPARATOR.join(mds) if mds else None
+        # a 0-page doc is ok with empty text; all pages incomplete: None
+        return PAGE_SEPARATOR.join(mds) if mds or not doc["pages"] else None
     return extract_main_content(payload)[0]
 
 
@@ -61,9 +62,7 @@ def test_every_url_byte_identical_to_kernel(corpus_rows, extracted):
 def test_partition_independence(spark, extracted):
     """Same per-url output under a different bucketing/parallelism."""
     df = C.build_corpus(spark, SF_TINY).repartition(13)
-    res = extract_pages(
-        df, ExtractConfig(num_buckets=3, hot_host_threshold=2), repartition=True
-    )
+    res = extract_pages(df, ExtractConfig(num_buckets=3, hot_host_threshold=2))
     other = {r.url: r for r in res.collect()}
     assert set(other) == set(extracted)
     for url, row in extracted.items():
@@ -115,7 +114,7 @@ def test_spans_match_kernel_elements(corpus_rows, extracted):
 
 def test_micro_batch_packing_bounds_cost():
     tasks = [
-        PageTask(url=f"u{i}", page_index=0, width=1275, height=1650, payload={})
+        PageTask(page_index=i, width=1275, height=1650, payload={})
         for i in range(50)
     ]
     per = tasks[0].est_visual_tokens
@@ -123,13 +122,20 @@ def test_micro_batch_packing_bounds_cost():
     assert all(len(b) <= 7 for b in batches)
     assert sum(len(b) for b in batches) == 50
     # order preserved
-    flat = [t.url for b in batches for t in b]
-    assert flat == [t.url for t in tasks]
+    flat = [t.page_index for b in batches for t in b]
+    assert flat == list(range(50))
+
+
+# JSON bodies that are not objects: a failure row each, never a task kill
+NON_OBJECT_BODIES = [b"[]", b"null", b'"s"', b"5"]
 
 
 def test_parse_pdf_payload_rejects_garbage():
-    with pytest.raises(ValueError):
-        parse_pdf_payload(b"<html>not a pdf</html>")
+    for blob in [b"<html>not a pdf</html>"] + [
+        C.PDF_MAGIC + b for b in NON_OBJECT_BODIES
+    ]:
+        with pytest.raises(ValueError):
+            parse_pdf_payload(blob)
 
 
 def test_hot_host_is_salted_across_buckets(spark):
@@ -170,11 +176,75 @@ def test_null_payload_yields_failure_row(spark):
         schema,
     )
     res = {r.url: r for r in extract_pages(
-        df, ExtractConfig(num_buckets=2, hot_host_threshold=99), repartition=False
+        df, ExtractConfig(num_buckets=2, hot_host_threshold=99)
     ).collect()}
     assert not res["https://x.org/a"].ok
     assert res["https://x.org/a"].error == "null_payload"
     assert res["https://x.org/b"].ok
+
+
+def test_kernel_aligns_pages_to_their_own_rows():
+    """One pandas batch mixing every row kind through the kernel, no
+    Spark: each output row must carry its own doc's pages, in order."""
+    import pandas as pd
+
+    from deepseek_ocr_2_spark.operators.extract import make_extract_kernel
+
+    eos = "<｜end▁of▁sentence｜>"
+
+    def pdf(*raws):
+        pages = [{"width": 800, "height": 1000, "raw_output": r} for r in raws]
+        return C.PDF_MAGIC + json.dumps({"pages": pages}).encode()
+
+    def span(i):
+        return f"<|ref|>text<|/ref|><|det|>[[{i},{i},50,50]]<|/det|>\npage {i}"
+
+    rows = [
+        ("https://k.org/html", b"<p>" + b"main text words " * 20 + b"</p>"),
+        ("https://k.org/null", None),
+        ("https://k.org/bad", C.PDF_MAGIC + b"{not json"),
+        ("https://k.org/p0", pdf()),
+        ("https://k.org/p1", pdf("only page" + eos)),
+        ("https://k.org/p3", pdf(span(0) + eos, span(1), span(2) + eos)),
+        ("https://k.org/dup", C.render_pdf_payload(4, "alpha " * 200)),
+        ("https://k.org/dup", C.render_pdf_payload(8, "bravo " * 200)),
+    ]
+    batch = pd.DataFrame(
+        {"url": [u for u, _ in rows], "html": [p for _, p in rows],
+         "lang": ["en"] * len(rows)}
+    )
+    kernel = make_extract_kernel(ExtractConfig(include_raw_output=True))
+    out = pd.concat(list(kernel(iter([batch]))))
+    # HTML/null rows are emitted before the PDF rows; match by position
+    # within each url
+    got = {}
+    for r in out.itertuples(index=False):
+        got.setdefault(r.url, []).append(r)
+    assert sum(map(len, got.values())) == len(rows)
+    for url, payload in rows:
+        r = got[url].pop(0)
+        if payload is None:
+            assert (r.ok, r.error) == (False, "null_payload")
+        elif url.endswith("/bad"):
+            assert not r.ok and r.error.startswith("payload_parse")
+            assert r.raw_output is None
+        elif payload.startswith(C.PDF_MAGIC):
+            pages = json.loads(payload[len(C.PDF_MAGIC):])["pages"]
+            assert r.extracted_text == kernel_golden(payload), url
+            assert r.total_pages == len(pages)
+            assert r.failed_pages == sum(
+                not has_eos(p["raw_output"]) for p in pages
+            )
+            assert r.raw_output == (
+                PAGE_SEPARATOR.join(p["raw_output"] for p in pages)
+                if pages else None
+            )
+        else:
+            assert r.extracted_text == kernel_golden(payload)
+            assert r.raw_output is None
+    three = next(r for r in out.itertuples() if r.url.endswith("/p3"))
+    assert (three.failed_pages, three.ok) == (1, True)
+    assert {s["page_index"] for s in three.spans} == {0, 2}
 
 
 def test_duplicate_urls_not_merged(spark):
@@ -193,7 +263,7 @@ def test_duplicate_urls_not_merged(spark):
         schema,
     ).coalesce(1)
     rows = extract_pages(
-        df, ExtractConfig(num_buckets=2, hot_host_threshold=99), repartition=False
+        df, ExtractConfig(num_buckets=2, hot_host_threshold=99)
     ).collect()
     assert len(rows) == 2
     texts = sorted(r.extracted_text for r in rows)
@@ -238,18 +308,22 @@ def test_malformed_pdf_pages_become_failure_rows(spark):
         {"pages": [{"width": 800, "height": 600, "raw_output": None}]}
     ).encode()
     bad2 = C.PDF_MAGIC + b"\xff\xfe not json"
+    # a width of 1e400 parses as inf: int() raises OverflowError
+    bad3 = C.PDF_MAGIC + b'{"pages": [{"width": 1e400, "height": 9, "raw_output": "x"}]}'
+    bads = [bad1, bad2, bad3] + [C.PDF_MAGIC + b for b in NON_OBJECT_BODIES]
     schema = StructType([
         StructField("url", StringType()),
         StructField("html", BinaryType()),
         StructField("lang", StringType()),
     ])
     df = spark.createDataFrame(
-        [("https://m.org/1", bad1, "en"), ("https://m.org/2", bad2, "en")],
+        [(f"https://m.org/{i}", b, "en") for i, b in enumerate(bads)],
         schema,
     )
     rows = {r.url: r for r in extract_pages(
-        df, ExtractConfig(num_buckets=2, hot_host_threshold=99), repartition=False
+        df, ExtractConfig(num_buckets=2, hot_host_threshold=99)
     ).collect()}
+    assert len(rows) == len(bads)
     assert all(not r.ok for r in rows.values())
     assert all(r.error.startswith("payload_parse") for r in rows.values())
 
@@ -304,7 +378,6 @@ def test_raw_output_column_is_config_gated(spark, corpus_rows, extracted):
         ExtractConfig(
             num_buckets=4, hot_host_threshold=99, include_raw_output=True
         ),
-        repartition=False,
     )
     rows = {r.url: r for r in res.collect()}
     assert set(rows) == set(corpus_rows)

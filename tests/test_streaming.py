@@ -37,11 +37,31 @@ def test_stream_drains_drop_dir_and_matches_batch(spark, tmp_path, corpus_df):
     got = {r.url: r.extracted_text for r in spark.read.parquet(out).collect()}
     want = {
         r.url: r.extracted_text
-        for r in extract_pages(
-            spark.read.parquet(drop), CFG, repartition=False
-        ).collect()
+        for r in extract_pages(spark.read.parquet(drop), CFG).collect()
     }
     assert got == want  # streaming output byte-identical to batch
+
+
+def test_stream_keeps_raw_output_column(spark, tmp_path, corpus_df):
+    """include_raw_output reaches the streaming sink, per url equal to
+    the batch path's raw_output."""
+    from dataclasses import replace
+
+    cfg = replace(CFG, include_raw_output=True)
+    drop = str(tmp_path / "drop")
+    out = str(tmp_path / "out")
+    corpus_df.limit(120).write.mode("overwrite").parquet(drop)
+    _await(ingest.start_extraction_stream(
+        spark, drop, out, str(tmp_path / "ckpt"), cfg
+    ))
+    got = spark.read.parquet(out)
+    assert "raw_output" in got.columns
+    want = {
+        r.url: r.raw_output
+        for r in extract_pages(spark.read.parquet(drop), cfg).collect()
+    }
+    assert {r.url: r.raw_output for r in got.collect()} == want
+    assert any(v is not None for v in want.values())
 
 
 def test_stream_incremental_topup_is_exactly_once(spark, tmp_path, corpus_df):
@@ -126,7 +146,7 @@ def test_stateful_host_counters_survive_restart(spark, tmp_path, corpus_df):
     from pyspark.sql import functions as F
 
     expect_failures = (
-        extract_pages(spark.read.parquet(drop), CFG, repartition=False)
+        extract_pages(spark.read.parquet(drop), CFG)
         .filter(~F.col("ok"))
         .count()
     )

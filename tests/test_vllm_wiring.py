@@ -86,7 +86,7 @@ def _tasks(n=3):
 
     return [
         PageTask(
-            url=f"u{i}", page_index=i, width=800, height=1100,
+            page_index=i, width=800, height=1100,
             payload={"image_bytes": b"\x89PNG-fake"},
         )
         for i in range(n)
