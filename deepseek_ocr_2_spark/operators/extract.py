@@ -32,18 +32,23 @@ Scale notes (designed for ~100 TB / 10^12 docs, tested on local[32]):
 * The incomplete-page filter (reference F2 with ``skip_repeat`` on,
   ``routers/ocr.py:332-335``) always drops pages whose raw output lacks
   the EOS marker; dropped pages are counted per-document
-  (``failed_pages``) and rolled into the metrics table by
-  ``plans/pipeline.py``.
+  (``failed_pages``) and tallied per partition by the kernel itself
+  (``LINEAGE_COUNTS``), for the metrics table ``plans/pipeline.py``
+  writes without a second pass over the output.
 """
 
 from __future__ import annotations
 
+import sys
+import zipimport
 from dataclasses import dataclass, field
 from itertools import islice
-from typing import Iterator, List, Optional
+from typing import Dict, Iterator, List, Optional
 
 import pandas as pd
 
+from pyspark import TaskContext
+from pyspark.accumulators import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -177,6 +182,64 @@ class _Out:
     def __len__(self) -> int:
         return len(self.url)
 
+    def counts(self) -> tuple:
+        """This batch's lineage counts, in ``LINEAGE_COUNTS`` order."""
+        return (
+            len(self.url),
+            self.ok.count(False),
+            sum(self.failed_pages),
+            sum(self.total_pages),
+            sum(self.est_visual_tokens),
+        )
+
+
+# per-partition lineage counts the kernel tallies over its own output
+# rows, named as the metrics table's columns (``plans/pipeline.py``)
+LINEAGE_COUNTS = (
+    "doc_count", "extraction_failure_count", "failed_page_count",
+    "page_count", "est_visual_tokens",
+)
+
+
+class LineageParam(AccumulatorParam):
+    """Accumulator of ``{partition id: LINEAGE_COUNTS tuple}``.
+
+    Each kernel task adds its partition's tally once, at task end.  The
+    kernel runs in the write's result stage, where Spark merges each
+    partition's update exactly once, so retried and speculative tasks
+    do not count twice.
+    """
+
+    def zero(self, value: Dict[int, tuple]) -> Dict[int, tuple]:
+        return {}
+
+    def addInPlace(
+        self, acc: Dict[int, tuple], update: Dict[int, tuple]
+    ) -> Dict[int, tuple]:
+        for pid, counts in update.items():
+            prior = acc.get(pid, (0,) * len(counts))
+            acc[pid] = tuple(a + b for a, b in zip(prior, counts))
+        return acc
+
+
+def drop_zip_finders() -> None:
+    """Drop the zipimport finders from ``sys.path_importer_cache``.
+
+    Spark's Python worker calls ``importlib.invalidate_caches()`` at the
+    start of every task, and on CPython < 3.13 each cached
+    ``zipimporter`` then eagerly re-reads its archive's directory: one
+    finder per imported package of pyspark.zip, ~16 re-reads of its
+    1,328 entries per task.  A dropped finder is rebuilt on demand from
+    zipimport's own directory cache, without a re-read.  Python 3.13
+    made the invalidation lazy; this helper can go once that is the
+    floor.
+    """
+    cache = sys.path_importer_cache
+    for path in [
+        p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)
+    ]:
+        del cache[path]
+
 
 def _extract_html_row(out: _Out, url: str, payload: bytes, lang) -> None:
     text, spans = extract_main_content(payload)
@@ -252,10 +315,18 @@ def _extract_pdf_rows(
         )
 
 
-def make_extract_kernel(cfg: ExtractConfig):
-    """Build the mapInPandas kernel (picklable closure over the config)."""
+def make_extract_kernel(
+    cfg: ExtractConfig, lineage: Optional[Accumulator] = None
+):
+    """Build the mapInPandas kernel (picklable closure over the config).
+
+    With a ``LineageParam`` accumulator as ``lineage``, each task adds
+    its partition's ``LINEAGE_COUNTS`` to it once its input is drained
+    (a partition with no rows adds nothing).
+    """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        tally = (0,) * len(LINEAGE_COUNTS)
         for pdf in batches:
             out = _Out(include_raw=cfg.include_raw_output)
             pdf_rows: List[tuple] = []
@@ -273,7 +344,11 @@ def make_extract_kernel(cfg: ExtractConfig):
             if pdf_rows:
                 _extract_pdf_rows(out, pdf_rows, cfg)
             if len(out):
+                tally = tuple(a + b for a, b in zip(tally, out.counts()))
                 yield out.frame()
+        if lineage is not None and tally[0]:
+            lineage.add({TaskContext.get().partitionId(): tally})
+        drop_zip_finders()
 
     return kernel
 
@@ -307,24 +382,30 @@ def with_partition_key(df: DataFrame, cfg: ExtractConfig) -> DataFrame:
     ).drop("is_hot_flag")
 
 
-def extract_kernel_stage(narrow: DataFrame, cfg: ExtractConfig) -> DataFrame:
+def extract_kernel_stage(
+    narrow: DataFrame,
+    cfg: ExtractConfig,
+    lineage: Optional[Accumulator] = None,
+) -> DataFrame:
     """(url, html, lang) rows -> extraction results.  The one kernel stage
     of both ``extract_pages`` and ``streaming.ingest.extract_stream``, so
     the schema always matches ``cfg.include_raw_output``."""
     schema = (
         EXTRACT_SCHEMA_WITH_RAW if cfg.include_raw_output else EXTRACT_SCHEMA
     )
-    return narrow.mapInPandas(make_extract_kernel(cfg), schema=schema)
+    return narrow.mapInPandas(make_extract_kernel(cfg, lineage), schema=schema)
 
 
 def extract_pages(
-    df: DataFrame, cfg: Optional[ExtractConfig] = None
+    df: DataFrame,
+    cfg: Optional[ExtractConfig] = None,
+    lineage: Optional[Accumulator] = None,
 ) -> DataFrame:
     """pages table -> extraction results (north-star output schema + QA cols).
 
     ``df`` must have columns (url, html, lang); extra columns are pruned
     before the kernel so the Arrow transfer only ships what the kernel
-    reads.
+    reads.  ``lineage``: see ``make_extract_kernel``.
     """
     cfg = cfg or ExtractConfig()
     keyed = with_partition_key(df, cfg)
@@ -336,4 +417,4 @@ def extract_pages(
     narrow = keyed.select("url", "html", "lang", "bucket").repartition(
         min(cfg.num_buckets, shuffle_parts), "bucket"
     )
-    return extract_kernel_stage(narrow.drop("bucket"), cfg)
+    return extract_kernel_stage(narrow.drop("bucket"), cfg, lineage)

@@ -11,7 +11,7 @@ so an Iceberg table slots in where the manifest is today):
 
 * each run writes ``<out>/data/snapshot=<id>/`` (results) and
   ``<out>/metrics/snapshot=<id>/`` (per-partition lineage rows:
-  input snapshot id, partition id, bucket doc/failure counts), then
+  input snapshot id, partition id, doc/failure/page counts), then
   appends the snapshot id to ``<out>/MANIFEST.json`` via
   write-temp + ``os.replace`` (atomic on POSIX);
 * a crashed run never appears in the manifest, so its partial files are
@@ -22,9 +22,13 @@ so an Iceberg table slots in where the manifest is today):
   shuffle join — left to AQE.
 
 Lineage (north rule: "per-partition lineage rows: input snapshot id,
-partition id, doc count, extraction-failure count") is captured *inside*
-the kernel stage via ``spark_partition_id()`` so it reflects the real
-physical partitioning of the inference stage.
+partition id, doc count, extraction-failure count") is tallied *inside*
+the kernel stage: each kernel task adds its partition's counts to a
+per-run accumulator (``operators.extract.LineageParam``), so the rows
+reflect the real physical partitioning of the inference stage and match
+the ``partition_id`` column of the data.  The driver writes them as the
+metrics table (pyarrow); nothing is read back from the snapshot, so a
+run is one SQL execution.
 """
 
 from __future__ import annotations
@@ -36,12 +40,31 @@ import uuid
 from dataclasses import dataclass
 from typing import List, Optional
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import ExtractConfig, extract_pages
+from ..operators.extract import (
+    LINEAGE_COUNTS,
+    ExtractConfig,
+    LineageParam,
+    extract_pages,
+)
 
 MANIFEST_NAME = "MANIFEST.json"
+
+# the metrics table, one row per kernel partition that extracted docs;
+# column order, types and nullability as the Spark groupBy that used to
+# build it wrote them
+METRICS_SCHEMA = pa.schema(
+    [
+        pa.field("partition_id", pa.int32()),
+        pa.field("input_snapshot_id", pa.string(), nullable=False),
+    ]
+    + [pa.field(c, pa.int64(), nullable=c != "doc_count") for c in LINEAGE_COUNTS]
+    + [pa.field("snapshot_id", pa.string(), nullable=False)]
+)
 
 
 @dataclass
@@ -364,7 +387,8 @@ def run_extraction(
             pages = pages.join(done, "url", "left_anti")
 
     snapshot_id = uuid.uuid4().hex[:12]
-    results = extract_pages(pages, cfg).withColumn(
+    lineage = spark.sparkContext.accumulator({}, LineageParam())
+    results = extract_pages(pages, cfg, lineage).withColumn(
         "partition_id", F.spark_partition_id()
     )
     schema_json = results.schema.json()
@@ -373,46 +397,33 @@ def run_extraction(
     writer = results.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(data_path)
+    writer.parquet(data_path)  # the run's only SQL execution
 
-    # Lineage/metrics from the *written* snapshot (single source of truth;
-    # no recompute of the kernel stage).  Read back with the written
-    # schema so partition-column types survive (see committed_results).
-    from pyspark.sql.types import StructType
-
-    written = spark.read.schema(
-        StructType.fromJson(json.loads(schema_json))
-    ).parquet(data_path)
-    metrics = (
-        written.groupBy("partition_id")
-        .agg(
-            F.lit(input_snapshot_id).alias("input_snapshot_id"),
-            F.count(F.lit(1)).alias("doc_count"),
-            F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias(
-                "extraction_failure_count"
-            ),
-            F.sum("failed_pages").alias("failed_page_count"),
-            F.sum("total_pages").alias("page_count"),
-            F.sum("est_visual_tokens").alias("est_visual_tokens"),
-        )
-        .withColumn("snapshot_id", F.lit(snapshot_id))
+    # Lineage rows come from the kernel tasks' tallies, merged on the
+    # driver when the write's result stage finished: the metrics table
+    # is written here and the totals are summed from the same rows.
+    rows = sorted(lineage.value.items())
+    counts = [[c[k] for _, c in rows] for k in range(len(LINEAGE_COUNTS))]
+    metrics = pa.Table.from_arrays(
+        [
+            [pid for pid, _ in rows],
+            [input_snapshot_id] * len(rows),
+            *counts,
+            [snapshot_id] * len(rows),
+        ],
+        schema=METRICS_SCHEMA,
     )
     metrics_path = os.path.join(output_dir, "metrics", f"snapshot={snapshot_id}")
-    metrics.write.mode("overwrite").parquet(metrics_path)
+    os.makedirs(metrics_path, exist_ok=True)
+    pq.write_table(metrics, os.path.join(metrics_path, "part-00000.parquet"))
+    # clean_orphans gives a tree without _SUCCESS the in-flight grace
+    open(os.path.join(metrics_path, "_SUCCESS"), "w").close()
 
-    totals = (
-        spark.read.parquet(metrics_path)
-        .agg(
-            F.sum("doc_count").alias("docs"),
-            F.sum("extraction_failure_count").alias("failures"),
-        )
-        .collect()[0]
-    )
     snap = Snapshot(
         snapshot_id=snapshot_id,
         committed_at=time.strftime("%Y-%m-%dT%H:%M:%S"),
-        doc_count=int(totals["docs"] or 0),
-        failure_count=int(totals["failures"] or 0),
+        doc_count=sum(counts[0]),
+        failure_count=sum(counts[1]),
         partition_by=list(partition_by) if partition_by else None,
         schema_json=schema_json,
     )

@@ -10,7 +10,11 @@ import pytest
 from deepseek_ocr_2_spark.functions.assemble import PAGE_SEPARATOR, process_page
 from deepseek_ocr_2_spark.functions.htmlmain import extract_main_content
 from deepseek_ocr_2_spark.functions.refparse import has_eos
-from deepseek_ocr_2_spark.operators.extract import ExtractConfig, extract_pages
+from deepseek_ocr_2_spark.operators.extract import (
+    ExtractConfig,
+    drop_zip_finders,
+    extract_pages,
+)
 from deepseek_ocr_2_spark.operators.decode import (
     PageTask,
     pack_micro_batches,
@@ -136,6 +140,48 @@ def test_parse_pdf_payload_rejects_garbage():
     ]:
         with pytest.raises(ValueError):
             parse_pdf_payload(blob)
+
+
+def test_drop_zip_finders_keeps_zip_imports_working(tmp_path, monkeypatch):
+    """Dropped zip finders come back on demand from zipimport's
+    directory cache: a later ``invalidate_caches()`` re-reads nothing,
+    and a submodule not imported before still imports."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    archive = str(tmp_path / "zipfinderpkg.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zipfinderpkg/__init__.py", "")
+        z.writestr("zipfinderpkg/sub/__init__.py", "")
+        z.writestr("zipfinderpkg/sub/a.py", "A = 1\n")
+        z.writestr("zipfinderpkg/sub/b.py", "B = 2\n")
+    monkeypatch.syspath_prepend(archive)
+
+    def zip_finders():
+        return [
+            f for f in sys.path_importer_cache.values()
+            if isinstance(f, zipimport.zipimporter)
+        ]
+
+    try:
+        import zipfinderpkg.sub.a
+
+        assert zipfinderpkg.sub.a.A == 1
+        assert len(zip_finders()) >= 3  # archive root, package, subpackage
+        files = zipimport._zip_directory_cache[archive]
+
+        drop_zip_finders()
+        assert zip_finders() == []
+        importlib.invalidate_caches()
+        import zipfinderpkg.sub.b
+
+        assert zipfinderpkg.sub.b.B == 2
+        assert zipimport._zip_directory_cache[archive] is files  # no re-read
+    finally:
+        for name in [m for m in sys.modules if m.startswith("zipfinderpkg")]:
+            del sys.modules[name]
 
 
 def test_hot_host_is_salted_across_buckets(spark):

@@ -4,6 +4,9 @@ from __future__ import annotations
 
 import os
 
+import pytest
+from pyspark.sql import functions as F
+
 from deepseek_ocr_2_spark.operators.extract import ExtractConfig
 from deepseek_ocr_2_spark.plans import pipeline as P
 from deepseek_ocr_2_spark.sources import corpus as C
@@ -63,6 +66,77 @@ def test_metrics_lineage_rows(spark, tmp_path):
     assert len(rows) > 1  # genuinely per-partition
     assert sum(r.doc_count for r in rows) == snap.doc_count
     assert all(r.input_snapshot_id == "in-7" for r in rows)
+
+
+def _metrics(spark, out, snap):
+    return spark.read.parquet(
+        os.path.join(out, "metrics", f"snapshot={snap.snapshot_id}")
+    )
+
+
+@pytest.mark.parametrize("partition_by", [None, ("lang",)])
+def test_metrics_rows_equal_snapshot_groupby(spark, tmp_path, partition_by):
+    """The kernel-tallied lineage rows equal a groupBy over the written
+    snapshot, all five counts; a resumed run with nothing new still
+    leaves a readable 0-row metrics table with the same schema."""
+    out = str(tmp_path / "out")
+    pages = C.build_corpus(spark, SF_TINY)
+    snap = P.run_extraction(
+        spark, pages, out, CFG, input_snapshot_id="in-3",
+        partition_by=partition_by,
+    )
+    counts = ("doc_count", "extraction_failure_count", "failed_page_count",
+              "page_count", "est_visual_tokens")
+    expected = (
+        P.committed_results(spark, out)
+        .groupBy("partition_id")
+        .agg(
+            F.count(F.lit(1)),
+            F.sum(F.when(~F.col("ok"), 1).otherwise(0)),
+            F.sum("failed_pages"),
+            F.sum("total_pages"),
+            F.sum("est_visual_tokens"),
+        )
+        .collect()
+    )
+    metrics = _metrics(spark, out, snap)
+    rows = metrics.collect()
+    assert sorted(tuple(r) for r in expected) == sorted(
+        (r.partition_id,) + tuple(r[c] for c in counts) for r in rows
+    )
+    assert {(r.input_snapshot_id, r.snapshot_id) for r in rows} == {
+        ("in-3", snap.snapshot_id)
+    }
+    assert snap.doc_count == sum(r.doc_count for r in rows) > 0
+    assert snap.failure_count == sum(r.extraction_failure_count for r in rows)
+
+    resumed = P.run_extraction(
+        spark, pages, out, CFG, input_snapshot_id="in-3",
+        partition_by=partition_by,
+    )
+    assert resumed.doc_count == resumed.failure_count == 0
+    empty = _metrics(spark, out, resumed)
+    assert empty.schema == metrics.schema
+    assert empty.count() == 0
+
+
+def test_run_extraction_is_one_sql_execution(spark, tmp_path):
+    """Lineage rides on the data write: a run, fresh or resumed, makes
+    exactly one SQL execution (the count ``perfbench/trace.py`` reads
+    from the SQL status store)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions() -> int:
+        bus.waitUntilEmpty()  # the status store is filled by a listener
+        return store.executionsList().size()
+
+    out = str(tmp_path / "out")
+    pages = C.build_corpus(spark, SF_TINY)
+    for _ in range(2):  # fresh, then resumed (anti-join against commits)
+        before = executions()
+        P.run_extraction(spark, pages, out, CFG)
+        assert executions() - before == 1
 
 
 def test_snapshot_time_travel(spark, tmp_path):

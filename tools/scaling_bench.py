@@ -145,8 +145,8 @@ class _ListParam(AccumulatorParam):
 task_walls = spark.sparkContext.accumulator([], _ListParam())
 _orig_make = X.make_extract_kernel
 
-def _timed_make(cfg):
-    inner = _orig_make(cfg)
+def _timed_make(cfg, lineage=None):
+    inner = _orig_make(cfg, lineage)
     def kernel(batches):
         t0 = time.time()
         yield from inner(batches)
