@@ -17,7 +17,7 @@ from __future__ import annotations
 import hashlib
 import re
 from functools import lru_cache
-from typing import Dict, Iterable, List, Sequence, Tuple
+from typing import Dict, Iterable, List, Optional, Sequence, Tuple
 
 import numpy as np
 
@@ -257,6 +257,82 @@ def minhash_signature(tokens: Sequence[str], num_perm: int = 128, k: int = 3, se
     )
     vals = (a[:, None] * x[None, :] + b[:, None]) % np.uint64(_MINHASH_P)
     return [int(v) for v in vals.min(axis=1)]
+
+
+# shingle occurrences per permutation pass of ``minhash_signatures``:
+# bounds the (chunk, num_perm) uint64 temporaries at ~1 MB each
+_SIG_CHUNK = 1024
+_P31 = np.uint64(_MINHASH_P)
+_U31 = np.uint64(31)
+
+
+def _mod_p31(v: np.ndarray, tmp: np.ndarray) -> np.ndarray:
+    """``v mod (2^31 - 1)`` in place for uint64 ``v < 2^63``, without
+    ``%``: two Mersenne folds leave ``v < 2^31 + 3`` and one masked
+    subtract makes it canonical.  ``tmp`` is scratch of ``v``'s shape."""
+    for _ in range(2):
+        np.right_shift(v, _U31, out=tmp)
+        v &= _P31
+        v += tmp
+    np.subtract(v, _P31, out=v, where=v >= _P31)
+    return v
+
+
+def minhash_signatures(
+    docs: Sequence[Optional[Sequence[str]]],
+    num_perm: int = 128,
+    k: int = 3,
+    seed: int = 42,
+) -> np.ndarray:
+    """``minhash_signature`` for a whole batch of token lists at once:
+    row ``i`` of the ``(len(docs), num_perm)`` int64 result equals
+    ``minhash_signature(docs[i] or [], num_perm, k, seed)``.
+
+    Each distinct shingle of the batch is md5-hashed once.  The affine
+    permutations then run over the batch's concatenated shingle
+    occurrences in ``_SIG_CHUNK``-sized slices (mod p by Mersenne
+    folds, no division), and ``np.minimum.reduceat`` takes each doc's
+    minimum within a slice; a doc that spans slices keeps the minimum
+    over them.  Docs without a shingle get the all-``_MERSENNE``
+    sentinel, as in the per-doc function.
+    """
+    a, b = _perm_params(num_perm, seed)
+    vocab: Dict[str, int] = {}
+    codes: List[int] = []
+    ends = np.empty(len(docs), dtype=np.int64)
+    for i, toks in enumerate(docs):
+        codes += [
+            vocab.setdefault(s, len(vocab)) for s in shingles(toks or (), k)
+        ]
+        ends[i] = len(codes)
+    sig = np.full((len(docs), num_perm), _MERSENNE, dtype=np.int64)
+    if not codes:
+        return sig
+    hashed = np.fromiter(
+        (_hash32(s) for s in vocab), dtype=np.uint64, count=len(vocab)
+    )
+    x = _mod_p31(hashed, np.empty_like(hashed))[np.asarray(codes)]
+    starts = np.concatenate(([0], ends[:-1]))
+    has = ends > starts
+    lo_doc, hi_doc = starts[has], ends[has]
+    mins = np.full((len(lo_doc), num_perm), _MINHASH_P, dtype=np.uint64)
+    buf = np.empty((min(_SIG_CHUNK, len(x)), num_perm), dtype=np.uint64)
+    tmp = np.empty_like(buf)
+    for lo in range(0, len(x), _SIG_CHUNK):
+        hi = min(lo + _SIG_CHUNK, len(x))
+        v, t = buf[: hi - lo], tmp[: hi - lo]
+        np.multiply(x[lo:hi, None], a[None, :], out=v)  # < 2^62: exact
+        v += b[None, :]
+        _mod_p31(v, t)
+        # docs whose shingle range [start, end) overlaps [lo, hi)
+        d0 = int(np.searchsorted(hi_doc, lo, side="right"))
+        d1 = int(np.searchsorted(lo_doc, hi, side="left"))
+        local = np.maximum(lo_doc[d0:d1], lo) - lo
+        np.minimum(
+            mins[d0:d1], np.minimum.reduceat(v, local, axis=0), out=mins[d0:d1]
+        )
+    sig[has] = mins
+    return sig
 
 
 def minhash_bands(signature: Sequence[int], bands: int = 16) -> List[str]:

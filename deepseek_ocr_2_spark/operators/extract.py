@@ -39,8 +39,6 @@ Scale notes (designed for ~100 TB / 10^12 docs, tested on local[32]):
 
 from __future__ import annotations
 
-import sys
-import zipimport
 from dataclasses import dataclass, field
 from itertools import islice
 from typing import Dict, Iterator, List, Optional
@@ -71,6 +69,7 @@ from .decode import (
     parse_pdf_payload,
     stub_decode_batch,
 )
+from .pyworker import drop_zip_finders
 
 # Scheme-relative-tolerant authority extraction: no trailing slash
 # required (path-less urls are common), authority ends at /, ?, or #.
@@ -220,25 +219,6 @@ class LineageParam(AccumulatorParam):
             prior = acc.get(pid, (0,) * len(counts))
             acc[pid] = tuple(a + b for a, b in zip(prior, counts))
         return acc
-
-
-def drop_zip_finders() -> None:
-    """Drop the zipimport finders from ``sys.path_importer_cache``.
-
-    Spark's Python worker calls ``importlib.invalidate_caches()`` at the
-    start of every task, and on CPython < 3.13 each cached
-    ``zipimporter`` then eagerly re-reads its archive's directory: one
-    finder per imported package of pyspark.zip, ~16 re-reads of its
-    1,328 entries per task.  A dropped finder is rebuilt on demand from
-    zipimport's own directory cache, without a re-read.  Python 3.13
-    made the invalidation lazy; this helper can go once that is the
-    floor.
-    """
-    cache = sys.path_importer_cache
-    for path in [
-        p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)
-    ]:
-        del cache[path]
 
 
 def _extract_html_row(out: _Out, url: str, payload: bytes, lang) -> None:

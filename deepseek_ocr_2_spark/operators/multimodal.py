@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 
 from ..functions.tiling import crop_ratio_for, num_image_tokens
 from .decode import PDF_MAGIC
+from .pyworker import drop_zip_finders
 
 PAGE_META_SCHEMA = StructType(
     [
@@ -89,6 +90,7 @@ def page_metadata(pages: DataFrame) -> DataFrame:
                     continue
             if rows:
                 yield pd.DataFrame(rows)
+        drop_zip_finders()
 
     return narrow.mapInPandas(run, schema=PAGE_META_SCHEMA)
 
@@ -128,6 +130,7 @@ def resized_page_metadata(pages: DataFrame, max_size: int = 4096) -> DataFrame:
             out["resized_h"] = rh
             out["was_capped"] = capped
             yield out
+        drop_zip_finders()
 
     return meta.mapInPandas(run, schema=RESIZED_META_SCHEMA)
 
@@ -189,6 +192,7 @@ def frame_sample(
                     continue  # malformed payload: skip, never kill
             if rows:
                 yield pd.DataFrame(rows)
+        drop_zip_finders()
 
     return narrow.mapInPandas(run, schema=FRAME_SAMPLE_SCHEMA)
 
@@ -248,5 +252,6 @@ def payload_features(pages: DataFrame, dim: int = 16) -> DataFrame:
                 )
             if rows:
                 yield pd.DataFrame(rows)
+        drop_zip_finders()
 
     return narrow.mapInPandas(run, schema=FEATURE_SCHEMA)

@@ -18,6 +18,9 @@ map-side partial aggregation (HashAggregate x2 around the exchange).
 
 from __future__ import annotations
 
+import os
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -25,8 +28,35 @@ from pyspark.sql.window import Window
 from ..functions.textstats import WORD_RE
 
 
+# session -> {table path: (its files' (path, size, mtime_ns, inode)s, schema)}
+_SCHEMAS = weakref.WeakKeyDictionary()
+
+
+def _files_key(sf_dir: str, name: str):
+    """The table's identity on disk, or None when it cannot be listed
+    (then ``spark.read`` reports the missing path itself)."""
+    from ..sources.stats import _parquet_files
+
+    try:
+        return tuple(
+            sorted(
+                (fp, st.st_size, st.st_mtime_ns, st.st_ino)
+                for fp in _parquet_files(sf_dir, name)
+                for st in [os.stat(fp)]
+            )
+        )
+    except OSError:
+        return None
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read a table, fanning out under-split small inputs (round 7).
+
+    The schema Spark infers for a table is kept per session and handed
+    back through ``spark.read.schema``: parquet schema inference is a
+    one-task Spark job per read, paid again by every query over an
+    unchanged table.  A rewritten file (new size, mtime or inode)
+    is inferred afresh.
 
     See ``sources.stats.adaptive_scan_partitions`` — the gate is
     footer-stat-driven and a no-op at warehouse scale; it exists because
@@ -35,7 +65,15 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     §2.5, unsplittable input)."""
     from ..sources.stats import adaptive_scan_partitions
 
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    key = _files_key(sf_dir, name)
+    known = _SCHEMAS.setdefault(spark, {})
+    if key is not None and known.get(path, (None,))[0] == key:
+        df = spark.read.schema(known[path][1]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if key is not None:
+            known[path] = (key, df.schema)
     par = adaptive_scan_partitions(spark, sf_dir, name)
     return df.repartition(par) if par else df
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .pyworker import drop_zip_finders
 from .relational import load
 
 TOPK = 10
@@ -365,6 +366,7 @@ def banded_lsh_keys(
                     "key": keys.reshape(-1),
                 }
             )
+        drop_zip_finders()
 
     return emb.select("vec_id", "embedding").mapInPandas(
         run, schema=_BAND_KEY_SCHEMA
@@ -710,6 +712,7 @@ def lsh_buckets(
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"].astype("int64"), "bucket": keys}
             )
+        drop_zip_finders()
 
     return emb.mapInPandas(run, schema=_BUCKET_SCHEMA)
 

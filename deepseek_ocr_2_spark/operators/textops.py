@@ -24,6 +24,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions import textstats
+from .pyworker import drop_zip_finders
 from .relational import alnum_tokens, load
 
 
@@ -218,6 +219,7 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
                     }
                 )
             yield pd.DataFrame(rows)
+        drop_zip_finders()
 
     return docs.mapInPandas(run, schema=_WINNOW_SCHEMA)
 
@@ -379,5 +381,6 @@ def lang_id_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "lang_stored": pdf["lang"],
                 }
             )
+        drop_zip_finders()
 
     return docs.mapInPandas(run, schema=_LANG_ID_SCHEMA)

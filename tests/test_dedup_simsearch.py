@@ -65,6 +65,30 @@ def test_shingle_sets_match_python_shingles(spark):
     assert got[6] == (["a b c", "b c a", "c a b", "a b c", "b c a"], 3)
 
 
+def test_jvm_band_keys_match_python_bands(spark):
+    """The JVM-built band keys over the batched kernel's signatures are
+    exactly ``textstats.minhash_bands(minhash_signature(...))`` for
+    every doc of sf0.01; docs under SHINGLE_K tokens get no key."""
+    from deepseek_ocr_2_spark.operators.relational import load
+
+    docs = load(spark, SF_SMALL, "documents").select("doc_id", "text")
+    got = {}
+    for r in dedup._minhash_bands_df(docs).collect():
+        got.setdefault(r.doc_id, []).append(r.band_key)
+    want = {}
+    for r in docs.collect():
+        toks = textstats.tokenize(r.text or "")
+        if len(toks) >= dedup.SHINGLE_K:
+            sig = textstats.minhash_signature(
+                toks, num_perm=dedup.NUM_PERM, k=dedup.SHINGLE_K
+            )
+            want[r.doc_id] = textstats.minhash_bands(sig, bands=dedup.BANDS)
+    assert len(want) > 400
+    assert {d: sorted(k) for d, k in got.items()} == {
+        d: sorted(k) for d, k in want.items()
+    }
+
+
 def test_simhash_pairs_respect_hamming_bound(spark):
     rows = dedup.simhash_near_dups(spark, SF_SMALL).collect()
     assert len(rows) > 0

@@ -10,16 +10,13 @@ import pytest
 from deepseek_ocr_2_spark.functions.assemble import PAGE_SEPARATOR, process_page
 from deepseek_ocr_2_spark.functions.htmlmain import extract_main_content
 from deepseek_ocr_2_spark.functions.refparse import has_eos
-from deepseek_ocr_2_spark.operators.extract import (
-    ExtractConfig,
-    drop_zip_finders,
-    extract_pages,
-)
+from deepseek_ocr_2_spark.operators.extract import ExtractConfig, extract_pages
 from deepseek_ocr_2_spark.operators.decode import (
     PageTask,
     pack_micro_batches,
     parse_pdf_payload,
 )
+from deepseek_ocr_2_spark.operators.pyworker import drop_zip_finders
 from deepseek_ocr_2_spark.sources import corpus as C
 
 from .conftest import SF_TINY

@@ -336,6 +336,71 @@ def test_shingle_tokenizer_regex_runs_once_per_row(
     assert all(op < g for op in n_ops for g in shingle_gens), plan
 
 
+def test_minhash_verify_runs_once_below_the_final_sort(spark):
+    """The MinHash candidates are range-partitioned before the verify
+    joins, so no Exchange sits above the ``array_intersect`` join (the
+    final sort reuses that partitioning; its range sampling never re-runs
+    the verify), the plan keeps exactly one hash and one range exchange,
+    ``array_intersect`` is evaluated by one operator (not inlined into
+    the join condition), and no ``size(...)`` Filter re-evaluates the
+    band-key array above the signature kernel."""
+    from deepseek_ocr_2_spark.operators import dedup
+
+    plan = formatted_plan(dedup.minhash_lsh_dedup(spark, SF_SMALL))
+    tree, details = plan.split("\n\n(1)", 1)
+    nodes = [
+        (int(m.group(1)), m.group(2), m.group(3))
+        for m in re.finditer(
+            r"^\((\d+)\) (\w+)[^\n]*\n((?:.+\n)*)", "(1)" + details, re.M
+        )
+    ]
+    # operator ids are numbered bottom-up: "above" is a larger id
+    verify = max(i for i, name, _ in nodes if name == "BroadcastHashJoin")
+    scored = [i for i, _, body in nodes if "array_intersect" in body]
+    assert len(scored) == 1 and scored[0] > verify, plan
+    assert "Exchange" not in tree.split("BroadcastHashJoin", 1)[0], tree
+    shuffles = sorted(
+        re.search(r"Arguments: (\w+)", body).group(1)
+        for _, name, body in nodes
+        if name == "Exchange"
+    )
+    assert shuffles == ["hashpartitioning", "rangepartitioning"], plan
+    kernel = min(i for i, name, _ in nodes if name == "MapInPandas")
+    assert not [
+        i for i, name, body in nodes
+        if name == "Filter" and i > kernel and "size(" in body
+    ], plan
+
+
+def test_load_reuses_inferred_schema_until_the_table_changes(
+    spark, tmp_path
+):
+    """A second ``load`` of an unchanged table starts no Spark job (no
+    parquet schema inference); rewriting the file with an extra column
+    makes the new column show up."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs():
+        return set(tracker.getJobIdsForGroup(None))
+
+    assert R.load(spark, str(tmp_path), "t").columns == ["a"]
+    before = jobs()
+    again = R.load(spark, str(tmp_path), "t")
+    assert jobs() == before
+    assert again.columns == ["a"]
+    assert sorted(r.a for r in again.collect()) == [1, 2, 3]
+
+    pq.write_table(pa.table({"a": [4, 5], "b": ["x", "y"]}), path)
+    fresh = R.load(spark, str(tmp_path), "t")
+    assert fresh.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in fresh.collect()) == [(4, "x"), (5, "y")]
+
+
 def test_registered_flagship_prunes_doc_json(spark):
     """The driver-registered flagship drops doc_json AFTER the select
     — Catalyst must prune the to_json expression entirely (at 100 TB

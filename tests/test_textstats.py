@@ -10,6 +10,7 @@ from deepseek_ocr_2_spark.functions.textstats import (
     jaccard,
     minhash_bands,
     minhash_signature,
+    minhash_signatures,
     quality_score,
     rolling_hashes,
     shingles,
@@ -142,6 +143,38 @@ class TestMinHash:
                 return v.min(axis=1)
             agree = float(np.mean(sig(a_doc) == sig(b_doc)))
             assert abs(agree - jac) < 0.12, (trial, jac, agree)
+
+    def test_batched_signatures_equal_per_doc_reference(self):
+        """``minhash_signatures`` is ``minhash_signature`` row by row:
+        null, empty, 1- and 2-token docs (one joined shingle), repeated
+        shingles, docs spanning a permutation chunk, and one doc longer
+        than a whole chunk, in the full batch and in shorter prefixes."""
+        import random as _random
+
+        import numpy as np
+
+        from deepseek_ocr_2_spark.functions.textstats import _SIG_CHUNK
+
+        rng = _random.Random(11)
+        words = [f"w{i}" for i in range(40)]
+        docs = [None, [], ["a"], ["a", "b"], ["a", "b", "c"],
+                ["x", "y", "x", "y", "x", "y", "x"]]
+        docs += [
+            [rng.choice(words) for _ in range(rng.randint(0, 60))]
+            for _ in range(60)
+        ]
+        docs.insert(30, [rng.choice(words) for _ in range(_SIG_CHUNK * 2 + 7)])
+        assert sum(len(shingles(d or [])) for d in docs) > 3 * _SIG_CHUNK
+        ref = [minhash_signature(d or []) for d in docs]
+        sig = minhash_signatures(docs)
+        assert sig.dtype == np.int64 and sig.shape == (len(docs), 128)
+        assert sig.tolist() == ref
+        for n in (0, 1, 2, 5, 31):
+            assert minhash_signatures(docs[:n]).tolist() == ref[:n]
+        assert minhash_signatures([["p", "q", "r", "s"]], num_perm=16,
+                                  seed=3).tolist() == [
+            minhash_signature(["p", "q", "r", "s"], num_perm=16, seed=3)
+        ]
 
 
 class TestSimHash:
