@@ -115,8 +115,7 @@ def detect_hot_hosts(spark, corpus_path: str, threshold: int = 200) -> tuple:
     not inside every job), so it stays outside the timed window."""
     from pyspark.sql import functions as F
 
-    from deepseek_ocr_2_spark.operators.extract import HOST_REGEX
-    from deepseek_ocr_2_spark.operators.scalejoin import hot_keys
+    from deepseek_ocr_2_spark.operators.extract import HOST_REGEX, hot_keys
 
     hosts = spark.read.parquet(corpus_path).select(
         F.lower(F.regexp_extract("url", HOST_REGEX, 1)).alias("host")

@@ -24,7 +24,7 @@ Layout:
   similarity search, text analysis, multimodal plumbing.
 * ``sources/``    — synthetic corpus generator, testdata loaders,
   snapshot/lineage sink with checkpoint-resume.
-* ``plans/``      — SparkSession builder, partitioning/salting helpers.
+* ``plans/``      — the committed extraction run (``pipeline.run_extraction``).
 * ``streaming/``  — Structured Streaming ingestion variant.
 """
 

@@ -3,8 +3,8 @@
 Re-implements the reference's ``process_output`` text path
 (``deepseek_ocr2_api/processors/postprocess.py:296-387``) without the
 drawing/cropping side effects (annotated images and figure crops are
-serving artifacts, not data).  Also provides the document-level page
-join (``utils/packaging.py:60,204``).
+serving artifacts, not data).  ``PAGE_SEPARATOR`` is the separator the
+extraction kernel joins a document's pages with.
 
 Element schema mirrors ``postprocess.py:343-349``:
 ``{id, type, bbox_normalized, bbox_pixels, text}`` where ``id`` is a
@@ -13,7 +13,7 @@ running per-page counter over (ref x bbox) pairs with exactly 4 coords.
 
 from __future__ import annotations
 
-from typing import Any, Dict, List, Sequence, Tuple
+from typing import Any, Dict, List, Tuple
 
 from .refparse import (
     clean_output,
@@ -25,9 +25,6 @@ from .refparse import (
 # PDF pages joined by this separator (API default,
 # deepseek_ocr2_api/config.py:183-186).
 PAGE_SEPARATOR = "\n<--- Page Split --->\n"
-
-# Multi-image documents joined by this (utils/packaging.py:60).
-IMAGE_DOC_SEPARATOR = "\n\n---\n\n"
 
 
 def _coerce_bbox(coords: Any) -> List[int] | None:
@@ -85,8 +82,3 @@ def process_page(
     markdown = replace_image_refs(markdown, image_refs, "images", page_index)
     markdown = clean_output(markdown, other_refs)
     return markdown, elements
-
-
-def join_pages(markdowns: Sequence[str], separator: str = PAGE_SEPARATOR) -> str:
-    """Document-level markdown assembly, pages already in page order."""
-    return separator.join(markdowns)

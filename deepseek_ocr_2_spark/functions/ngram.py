@@ -9,13 +9,13 @@ whitelisted token ids (``<td>``/``</td>`` = {128821, 128822} in the
 reference config) are never banned.
 
 Here it is a pure function over integer sequences so it can be
-unit/property-tested without torch and reused by the deterministic decode
-stub, which applies it greedily while generating fixture continuations.
+unit/property-tested without torch; the vLLM decode path
+(``operators/decode.py``) builds its logits processor on it.
 """
 
 from __future__ import annotations
 
-from typing import FrozenSet, List, Sequence, Set
+from typing import FrozenSet, Sequence, Set
 
 # deepseek_ocr2_api/config.py:291-301 / run_dpsk_ocr2_pdf.py:46
 DEFAULT_WHITELIST: FrozenSet[int] = frozenset({128821, 128822})
@@ -47,24 +47,3 @@ def banned_next_tokens(
         if ngram[:-1] == current_prefix:
             banned.add(ngram[-1])
     return banned - set(whitelist_token_ids)
-
-
-def apply_no_repeat_ngram(
-    tokens: Sequence[int],
-    ngram_size: int = DEFAULT_NGRAM_SIZE,
-    window_size: int = DEFAULT_WINDOW_SIZE,
-    whitelist_token_ids: FrozenSet[int] = DEFAULT_WHITELIST,
-) -> List[int]:
-    """Greedy re-generation filter used by the decode stub.
-
-    Replays ``tokens`` left to right, dropping any token that the n-gram
-    rule would have banned at its position.  This gives the stub the same
-    repetition-suppression *behavior class* as the real sampler without a
-    model in the loop.
-    """
-    out: List[int] = []
-    for tok in tokens:
-        if tok in banned_next_tokens(out, ngram_size, window_size, whitelist_token_ids):
-            continue
-        out.append(tok)
-    return out

@@ -7,13 +7,16 @@ Re-implements the decision math of the reference preprocessor
 * candidate grid construction + closest-aspect-ratio argmin with the
   area tie-break (``image_process.py:11-42``),
 * the <=768x768 no-crop rule (``image_process.py:386-398``),
-* the visual-token layout: ``num_queries_base**2`` global tokens + 1
-  view separator + ``(num_queries*wtiles) * (num_queries*htiles)`` local
-  tokens when tiled (``image_process.py:447-458``), giving the published
-  256..1120 = k*144 + 256 range for the default config.
+* the per-image visual-token count: ``num_queries_base**2`` global
+  tokens + 1 view separator + ``(num_queries*wtiles) *
+  (num_queries*htiles)`` local tokens when tiled
+  (``image_process.py:447-458``), giving the published 256..1120 =
+  k*144 + 256 range for the default config.
 
 This math decides decode cost per page, so the Spark pipeline reuses it
 as a *cost model* for micro-batch packing inside the inference stage.
+The pixels and the prompt-stream layout themselves are built by the
+model's own processor, behind the decode boundary.
 """
 
 from __future__ import annotations
@@ -143,62 +146,3 @@ def num_image_tokens(
     if wtiles > 1 or htiles > 1:
         tokens += (num_queries * wtiles) * (num_queries * htiles)
     return tokens
-
-
-def token_layout(
-    text_split_lens: List[int],
-    image_dims: List[Tuple[int, int]],
-    cropping: bool = True,
-    bos: bool = True,
-    eos: bool = True,
-    image_size: int = IMAGE_SIZE,
-    base_size: int = BASE_SIZE,
-    min_num: int = MIN_CROPS,
-    max_num: int = MAX_CROPS,
-) -> dict:
-    """The full prompt-stream layout of ``tokenize_with_images``
-    (``image_process.py:330-475``), pixel- and tokenizer-free (P5).
-
-    The reference interleaves: [bos?] text₀ image₀ text₁ image₁ …
-    textₙ [eos?], where each imageᵢ contributes
-    ``num_image_tokens(dims)`` positions flagged True in
-    ``images_seq_mask`` and a ``(wtiles, htiles)`` entry in
-    ``images_spatial_crop``.  Text tokenization itself needs the
-    LlamaTokenizer (model asset, behind the decode boundary) — but the
-    *layout* is pure arithmetic over the split lengths, which is what
-    the inference stage needs to size tensors and what this kernel
-    pins against the reference structure.
-
-    ``text_split_lens`` must have exactly ``len(image_dims) + 1``
-    entries (the reference asserts the prompt contains one ``<image>``
-    tag per image, so splitting yields n+1 text separators).
-    """
-    if len(text_split_lens) != len(image_dims) + 1:
-        raise ValueError(
-            "need len(image_dims)+1 text splits "
-            f"(got {len(text_split_lens)} for {len(image_dims)} images)"
-        )
-    mask: List[bool] = []
-    num_tokens: List[int] = []
-    spatial_crop: List[Tuple[int, int]] = []
-    for sep_len, (w, h) in zip(text_split_lens, image_dims):
-        mask += [False] * sep_len
-        n_img = num_image_tokens(
-            w, h, cropping, image_size, base_size, min_num, max_num
-        )
-        mask += [True] * n_img
-        num_tokens.append(n_img)
-        spatial_crop.append(
-            crop_ratio_for(w, h, cropping, min_num, max_num, image_size)
-        )
-    mask += [False] * text_split_lens[-1]
-    if bos:
-        mask = [False] + mask
-    if eos:
-        mask = mask + [False]
-    return {
-        "total_len": len(mask),
-        "images_seq_mask": mask,
-        "num_image_tokens": num_tokens,
-        "images_spatial_crop": spatial_crop,
-    }

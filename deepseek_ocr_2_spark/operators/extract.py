@@ -75,6 +75,22 @@ from .pyworker import drop_zip_finders
 # required (path-less urls are common), authority ends at /, ?, or #.
 HOST_REGEX = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://([^/?#]+)"
 
+
+def hot_keys(df: DataFrame, key: str, threshold: int) -> List[str]:
+    """Keys whose row count exceeds ``threshold`` — e.g. the hosts to
+    pass as ``ExtractConfig.static_hot_hosts``.  One tiny aggregate with
+    map-side partials; in production it lives with the snapshot
+    statistics."""
+    rows = (
+        df.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") > threshold)
+        .select(key)
+        .collect()
+    )
+    return [r[0] for r in rows]
+
+
 SPAN_STRUCT = StructType(
     [
         StructField("id", IntegerType(), False),

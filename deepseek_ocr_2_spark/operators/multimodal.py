@@ -1,8 +1,8 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 The container ships no image/audio codecs (no PIL/ffmpeg/torch), so the
-*decode* step is stubbed behind ``NotImplementedError`` / a deterministic
-fake — but everything Spark-side is real and tested: schemas, Arrow
+*decode* step is a deterministic fake (``deterministic_fake_features``)
+— but everything Spark-side is real and tested: schemas, Arrow
 batch shapes, UDF signatures, partitioning, and the tiling/token-cost
 math the real decoder would use (``functions/tiling.py``, byte-parity
 with the reference preprocessor).
@@ -204,19 +204,6 @@ FEATURE_SCHEMA = StructType(
         StructField("feature", ArrayType(IntegerType()), False),
     ]
 )
-
-
-def decode_image(blob: bytes) -> "np.ndarray":
-    """Real pixel decode — unavailable in this container by design.
-
-    The real path needs an image codec (PIL/libjpeg); keep the boundary
-    explicit so GPU clusters plug a decoder in without touching the
-    Spark plumbing around it.
-    """
-    raise NotImplementedError(
-        "pixel decode requires an image codec not present in this "
-        "container; deterministic_fake_features() is the CI stand-in"
-    )
 
 
 def deterministic_fake_features(blob: bytes, dim: int = 16) -> list:

@@ -243,14 +243,6 @@ def winnow_window_counts_oracle() -> str:
     """
 
 
-_LANG_ID_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("lang_detected", StringType(), False),
-        StructField("lang_stored", StringType(), True),
-    ]
-)
-
 # Shared with functions/textstats.detect_language — the heuristic is
 # deliberately SQL-expressible (token-occurrence stopword votes + CJK
 # char counts + a fixed-order argmax), so the SAME decision runs
@@ -361,26 +353,3 @@ def lang_id_oracle() -> str:
            lang_stored
     FROM scored
     """
-
-
-def lang_id_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same language-ID decision as an Arrow-batched Python kernel
-    (``textstats.detect_language``) — kept as the plug-in point where a
-    real model (fastText et al.) slots in behind the identical schema;
-    parity with the JVM query is pinned by tests."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "lang_detected": [
-                        textstats.detect_language(t or "") for t in pdf["text"]
-                    ],
-                    "lang_stored": pdf["lang"],
-                }
-            )
-        drop_zip_finders()
-
-    return docs.mapInPandas(run, schema=_LANG_ID_SCHEMA)

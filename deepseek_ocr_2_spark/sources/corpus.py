@@ -38,7 +38,6 @@ from typing import Iterator, List, Tuple
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     LongType,
@@ -290,14 +289,6 @@ def build_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     if par:
         docs = docs.repartition(par)
     return docs.mapInPandas(_build_rows, schema=CORPUS_SCHEMA)
-
-
-def payload_type_col() -> F.Column:
-    """'pdf' | 'html' from the binary payload magic, JVM-side (no UDF)."""
-    return F.when(
-        F.substring(F.col("html"), 1, len(PDF_MAGIC)) == F.lit(PDF_MAGIC),
-        F.lit("pdf"),
-    ).otherwise(F.lit("html"))
 
 
 # The greedy-paragraph-fold CTE chain (see extraction_metrics_oracle's

@@ -409,6 +409,19 @@ def test_all_hot_corpus_distributes_evenly(spark):
     assert max(counts) < 4 * (sum(counts) / len(counts))  # no pile-up
 
 
+def test_hot_keys_detects_the_giant(spark):
+    from pyspark.sql import functions as F
+    from deepseek_ocr_2_spark.operators.extract import hot_keys
+
+    df = spark.range(0, 1000).select(
+        F.when(F.col("id") < 700, F.lit("giant"))
+        .otherwise(F.concat(F.lit("h"), (F.col("id") % 50).cast("string")))
+        .alias("host")
+    )
+    hot = hot_keys(df, "host", threshold=100)
+    assert hot == ["giant"]
+
+
 def test_raw_output_column_is_config_gated(spark, corpus_rows, extracted):
     """Reference S8/F4: include_raw_output adds the pre-postprocess
     model output per document (page-separator-joined, in page order,

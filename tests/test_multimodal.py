@@ -58,11 +58,6 @@ def test_frame_sample_uniform_stride(spark, pages):
         assert all(len(f.frame_feature) == 8 for f in frames)
 
 
-def test_decode_image_is_an_explicit_boundary():
-    with pytest.raises(NotImplementedError):
-        M.decode_image(b"\x89PNG...")
-
-
 def test_fake_features_deterministic():
     a = M.deterministic_fake_features(b"hello world", 16)
     assert a == M.deterministic_fake_features(b"hello world", 16)

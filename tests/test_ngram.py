@@ -6,7 +6,6 @@ from hypothesis import strategies as st
 
 from deepseek_ocr_2_spark.functions.ngram import (
     DEFAULT_WHITELIST,
-    apply_no_repeat_ngram,
     banned_next_tokens,
 )
 
@@ -43,15 +42,3 @@ class TestBannedNextTokens:
     def test_property_whitelist(self, seq):
         banned = banned_next_tokens(seq, ngram_size=4, window_size=30)
         assert banned.isdisjoint(DEFAULT_WHITELIST)
-
-
-class TestApplyFilter:
-    def test_repeat_loop_broken(self):
-        loop = [1, 2, 3, 4] * 10
-        out = apply_no_repeat_ngram(loop, ngram_size=4, window_size=40)
-        # after the first full cycle plus prefix, the repeat is suppressed
-        assert len(out) < len(loop)
-
-    def test_no_false_positives_on_unique(self):
-        seq = list(range(100))
-        assert apply_no_repeat_ngram(seq, ngram_size=4, window_size=40) == seq

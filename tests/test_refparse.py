@@ -1,11 +1,6 @@
 """Golden tests for the ref/det parsing + cleaning kernel (FIXTURES.md §3)."""
 
-from deepseek_ocr_2_spark.functions.assemble import (
-    IMAGE_DOC_SEPARATOR,
-    PAGE_SEPARATOR,
-    join_pages,
-    process_page,
-)
+from deepseek_ocr_2_spark.functions.assemble import PAGE_SEPARATOR, process_page
 from deepseek_ocr_2_spark.functions.refparse import (
     EOS_TOKEN,
     clean_output,
@@ -160,9 +155,7 @@ class TestProcessPage:
 
 class TestPageJoin:
     def test_pdf_separator(self):
-        assert join_pages(["a", "b"]) == f"a{PAGE_SEPARATOR}b"
         assert PAGE_SEPARATOR == "\n<--- Page Split --->\n"
-        assert IMAGE_DOC_SEPARATOR == "\n\n---\n\n"
 
 
 class TestHasEos:

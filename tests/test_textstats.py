@@ -212,9 +212,9 @@ class TestShingles:
 
 
 class TestLangIdParity:
-    """The JVM lang-id query, the Python kernel, and the DuckDB oracle
-    implement ONE decision rule — pin all three against each other so a
-    drift in any implementation fails loudly."""
+    """The JVM lang-id query, the Python ``detect_language``, and the
+    DuckDB oracle implement ONE decision rule — pin all three against
+    each other so a drift in any implementation fails loudly."""
 
     def test_jvm_query_equals_python_kernel(self, spark):
         from deepseek_ocr_2_spark.operators import textops
@@ -226,8 +226,10 @@ class TestLangIdParity:
             for r in textops.lang_id_heuristic(spark, SF_SMALL).collect()
         }
         ker = {
-            r.doc_id: r.lang_detected
-            for r in textops.lang_id_kernel(spark, SF_SMALL).collect()
+            r.doc_id: detect_language(r.text or "")
+            for r in spark.read.parquet(
+                f"{SF_SMALL}/documents.parquet"
+            ).collect()
         }
         assert jvm == ker and len(jvm) == 500
 

@@ -75,56 +75,3 @@ class TestTokenCounts:
         assert MIN_CROPS <= wt * ht <= MAX_CROPS or (wt, ht) == (1, 1)
         assert tokens == (257 if (wt, ht) == (1, 1) else 257 + 144 * wt * ht)
         assert tokens <= 257 + 144 * MAX_CROPS  # 1121 ceiling
-
-
-def test_token_layout_structure():
-    """P5: the interleaved prompt layout of tokenize_with_images —
-    text splits False, image blocks True, bos/eos False, counts equal
-    num_image_tokens."""
-    from deepseek_ocr_2_spark.functions.tiling import (
-        num_image_tokens,
-        token_layout,
-    )
-
-    lay = token_layout([3, 2], [(500, 500)])  # untiled page
-    n = num_image_tokens(500, 500)
-    assert n == 257
-    assert lay["num_image_tokens"] == [257]
-    assert lay["images_spatial_crop"] == [(1, 1)]
-    # [bos] 3 text, 257 image, 2 text [eos]
-    assert lay["total_len"] == 1 + 3 + 257 + 2 + 1
-    m = lay["images_seq_mask"]
-    assert m[0] is False and m[-1] is False
-    assert m[1:4] == [False] * 3
-    assert m[4:4 + 257] == [True] * 257
-    assert sum(m) == 257
-
-
-def test_token_layout_multi_image_and_tiled():
-    from deepseek_ocr_2_spark.functions.tiling import (
-        num_image_tokens,
-        token_layout,
-    )
-
-    dims = [(2000, 1000), (700, 700)]
-    lay = token_layout([5, 1, 4], dims, bos=False, eos=False)
-    expect = [num_image_tokens(*d) for d in dims]
-    assert lay["num_image_tokens"] == expect
-    assert expect[0] > 257 and expect[1] == 257  # first page tiles
-    assert lay["total_len"] == 5 + expect[0] + 1 + expect[1] + 4
-    assert sum(lay["images_seq_mask"]) == sum(expect)
-    # spatial crop mirrors the tiler
-    from deepseek_ocr_2_spark.functions.tiling import crop_ratio_for
-
-    assert lay["images_spatial_crop"] == [
-        crop_ratio_for(*dims[0]), (1, 1)
-    ]
-
-
-def test_token_layout_split_count_guard():
-    import pytest
-
-    from deepseek_ocr_2_spark.functions.tiling import token_layout
-
-    with pytest.raises(ValueError):
-        token_layout([3], [(500, 500)])
