@@ -42,3 +42,25 @@ class TestBannedNextTokens:
     def test_property_whitelist(self, seq):
         banned = banned_next_tokens(seq, ngram_size=4, window_size=30)
         assert banned.isdisjoint(DEFAULT_WHITELIST)
+
+
+def _greedy_replay(tokens, **kw):
+    """Replay ``tokens`` as a sampler masking ``banned_next_tokens`` would:
+    a token the rule bans at its position is dropped."""
+    out = []
+    for tok in tokens:
+        if tok not in banned_next_tokens(out, **kw):
+            out.append(tok)
+    return out
+
+
+class TestApplyFilter:
+    def test_repeat_loop_broken(self):
+        loop = [1, 2, 3, 4] * 10
+        out = _greedy_replay(loop, ngram_size=4, window_size=40)
+        # after the first full cycle plus prefix, the repeat is suppressed
+        assert len(out) < len(loop)
+
+    def test_no_false_positives_on_unique(self):
+        seq = list(range(100))
+        assert _greedy_replay(seq, ngram_size=4, window_size=40) == seq
