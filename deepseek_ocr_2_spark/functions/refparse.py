@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import ast
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, List, Sequence, Tuple
 
 # Exact EOS marker emitted by the model: U+FF5C fullwidth bars and

@@ -335,6 +335,46 @@ def minhash_signatures(
     return sig
 
 
+# splitmix64 constants (Steele, Lea, Flood 2014): the golden-ratio
+# increment and the two finalizer multipliers
+_GOLDEN = np.uint64(0x9E3779B97F4A7C15)
+_MIX1 = np.uint64(0xBF58476D1CE4E5B9)
+_MIX2 = np.uint64(0x94D049BB133111EB)
+
+
+def _splitmix64(z: np.ndarray) -> np.ndarray:
+    """The splitmix64 finalizer over a uint64 array: a bijection."""
+    z = (z ^ (z >> np.uint64(30))) * _MIX1
+    z = (z ^ (z >> np.uint64(27))) * _MIX2
+    return z ^ (z >> np.uint64(31))
+
+
+def minhash_band_keys(sig: np.ndarray, bands: int) -> np.ndarray:
+    """LSH band keys of a ``(n, num_perm)`` signature matrix as an
+    ``(n, bands)`` int64 matrix, a pure function of each band's values.
+
+    Column ``b`` mixes band ``b``'s ``num_perm // bands`` values and the
+    index ``b`` itself by splitmix64 rounds: the state starts at the
+    finalized band index and absorbs one value per round.  Two docs get
+    equal keys in band ``b`` whenever their band-``b`` values are equal,
+    the case in which ``minhash_bands`` gives them equal strings; keys
+    of unequal bands (or of different band indices) collide with 64-bit
+    hash odds.  Plain uint64 arithmetic over the whole matrix, so the
+    keys do not depend on the batch, the process or the platform
+    (Python's ``hash()`` is salted per process).
+    """
+    sig = np.asarray(sig, dtype=np.int64)
+    rows = sig.shape[1] // bands
+    vals = sig[:, : bands * rows].reshape(len(sig), bands, rows).view(np.uint64)
+    h = np.broadcast_to(
+        _splitmix64(np.arange(bands, dtype=np.uint64) * _GOLDEN + _GOLDEN),
+        (len(sig), bands),
+    )
+    for r in range(rows):
+        h = _splitmix64((h ^ vals[:, :, r]) + _GOLDEN)
+    return h.view(np.int64)
+
+
 def minhash_bands(signature: Sequence[int], bands: int = 16) -> List[str]:
     """LSH band keys: '{band_idx}:{md5(band values)}'."""
     rows = len(signature) // bands

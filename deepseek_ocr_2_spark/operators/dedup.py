@@ -9,17 +9,18 @@ job needs):
                    (per-row shingle arrays -> inverted-index groupBy ->
                    C(k,2) pair explode with per-doc totals carried in
                    the posting list), oracle-verified
-* MinHash + LSH — signatures from one batched kernel call per Arrow
-                  batch, band keys built and exploded JVM-side,
-                  candidate pairs from band-bucket self-join, verified
+* MinHash + LSH — one batched kernel call per Arrow batch yields
+                  ``bands`` (doc_id, 64-bit band key) rows per doc;
+                  candidate pairs from the band-key self-join, verified
                   by exact Jaccard on the candidates only
 * SimHash       — 64-bit signature kernel; near-dup candidates via the
-                  4x16-bit band trick (Hamming<=3 pairs must share a band)
+                  block-combination index (Hamming<=3 pairs must share
+                  a combination of untouched blocks)
 
 Scale notes: the Jaccard self-join shuffles on the shingle key — at
 10^12 docs that join is what MinHash/LSH exists to avoid: LSH touches
-only ``bands`` rows per doc and its self-join keys are 128-bit band
-buckets whose expected bucket size is O(1) for non-duplicate text, so
+only ``bands`` rows per doc and its self-join keys are 64-bit band
+hashes whose expected bucket size is O(1) for non-duplicate text, so
 candidate generation stays linear.  The exact-Jaccard verify runs only
 on candidates (a tiny fraction).  Hot shingles (boilerplate n-grams)
 are the skew risk: the LSH path is immune (bucket = whole band of the
@@ -31,12 +32,12 @@ from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     LongType,
     StructField,
     StructType,
@@ -211,52 +212,55 @@ def ngram_jaccard_oracle() -> str:
     """
 
 
-_SIG_SCHEMA = StructType(
+_BAND_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), False),
-        StructField("sig", ArrayType(LongType()), False),
+        StructField("band_key", LongType(), False),
     ]
 )
 
-# the BANDS LSH keys of a ``sig`` column, JVM-side: '{band}:' + the
-# first 16 hex digits of md5 over the band's decimal values joined by
-# ',' -- the same strings ``textstats.minhash_bands`` builds
-_BAND_KEYS = (
-    f"transform(sequence(0, {BANDS - 1}), i -> concat(i, ':',"
-    f" substr(md5(array_join(slice(sig, i * {NUM_PERM // BANDS} + 1,"
-    f" {NUM_PERM // BANDS}), ',')), 1, 16)))"
-)
+
+def _band_rows(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One batch of (doc_id, text) -> its (doc_id, band_key) rows:
+    BANDS rows per doc of >= SHINGLE_K tokens, in band order.
+
+    One ``textstats.minhash_signatures`` call for the batch, then
+    ``textstats.minhash_band_keys`` hashes each band (its values and
+    its index) into one int64, so both columns are flat int64 arrays.
+    Shorter docs are below dedup resolution: the exact-shingle verify
+    has no shingle for them either, and dropping them keeps the
+    empty/near-empty docs from all sharing one sentinel bucket (a
+    C(n,2) candidate blowup)."""
+    toks = [textstats.tokenize(t or "") for t in pdf["text"]]
+    keep = [i for i, t in enumerate(toks) if len(t) >= SHINGLE_K]
+    sig = textstats.minhash_signatures(
+        [toks[i] for i in keep], num_perm=NUM_PERM, k=SHINGLE_K
+    )
+    keys = textstats.minhash_band_keys(sig, BANDS)
+    ids = pdf["doc_id"].to_numpy()[keep]
+    return pd.DataFrame(
+        {"doc_id": np.repeat(ids, BANDS), "band_key": keys.ravel()}
+    )
 
 
 def _minhash_bands_df(docs: DataFrame) -> DataFrame:
-    """(doc_id, band_key): BANDS rows per doc of >= SHINGLE_K tokens.
+    """(doc_id, band_key) bigint rows straight from the kernel, one
+    ``_band_rows`` call per Arrow batch.
 
-    One ``textstats.minhash_signatures`` call per Arrow batch; the band
-    keys are built and exploded in the JVM.  Shorter docs are below
-    dedup resolution: the exact-shingle verify has no shingle for them
-    either, and dropping them keeps the empty/near-empty docs from all
-    sharing one sentinel bucket (a C(n,2) candidate blowup)."""
+    Both columns cross the Arrow boundary as int64 arrays: no
+    per-element conversion of a signature array, no string key built
+    JVM-side.  Equal bands give equal keys, so the candidates contain
+    those of exact per-band keys; a 64-bit collision can only add a
+    candidate, which the exact verify drops."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            toks = [textstats.tokenize(t or "") for t in pdf["text"]]
-            keep = [i for i, t in enumerate(toks) if len(t) >= SHINGLE_K]
-            if keep:
-                sig = textstats.minhash_signatures(
-                    [toks[i] for i in keep], num_perm=NUM_PERM, k=SHINGLE_K
-                )
-                yield pd.DataFrame(
-                    {"doc_id": pdf["doc_id"].to_numpy()[keep], "sig": list(sig)}
-                )
+            rows = _band_rows(pdf)
+            if len(rows):
+                yield rows
         drop_zip_finders()
 
-    # explode_outer, deliberately: over a projected key column, plain
-    # explode's InferFiltersFromGenerate adds ``size(keys) > 0`` and
-    # pushdown inlines the 32 md5s into that Filter, evaluating them
-    # twice per doc.  The array is never empty: no null row comes out.
-    return docs.mapInPandas(run, schema=_SIG_SCHEMA).select(
-        "doc_id", F.explode_outer(F.expr(_BAND_KEYS)).alias("band_key")
-    )
+    return docs.mapInPandas(run, schema=_BAND_SCHEMA)
 
 
 def _lsh_candidate_pairs(docs: DataFrame) -> DataFrame:
@@ -306,8 +310,9 @@ def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     every emitted pair is verified by true shingle Jaccard).  The
     32x4 banded layout's independence model puts the per-pair miss
     probability at J=0.8 at (1-0.8^4)^32 ~= 4.7e-8; the measured rate
-    is higher, ~8e-6 (1 miss over the planted pairs of the benchmark's
-    seeds 1-60: seed 35's pair).  Total recall on the
+    is higher, ~8e-6 (1 miss over the 128,465 planted pairs of the
+    benchmark's seeds 1-60: seed 35's pair; ``tools/band_recall.py``
+    measures it per band layout).  Total recall on the
     fixed-seed testdata is pinned by ``tests/test_dedup_simsearch.py``,
     so the all-pairs exact SQL (``minhash_lsh_oracle``) is an oracle
     for it there, the same licensing move as ``embedding_near_dup_lsh``.

@@ -39,6 +39,7 @@ Scale notes (designed for ~100 TB / 10^12 docs, tested on local[32]):
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass, field
 from itertools import islice
 from typing import Dict, Iterator, List, Optional
@@ -74,6 +75,8 @@ from .pyworker import drop_zip_finders
 # Scheme-relative-tolerant authority extraction: no trailing slash
 # required (path-less urls are common), authority ends at /, ?, or #.
 HOST_REGEX = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://([^/?#]+)"
+
+_log = logging.getLogger(__name__)
 
 
 def hot_keys(df: DataFrame, key: str, threshold: int) -> List[str]:
@@ -238,7 +241,16 @@ class LineageParam(AccumulatorParam):
 
 
 def _extract_html_row(out: _Out, url: str, payload: bytes, lang) -> None:
-    text, spans = extract_main_content(payload)
+    """One HTML payload -> one row.  Any exception the extractor raises
+    becomes an ``ok=false`` row for its one failed page, never a task
+    kill that would take the rest of the partition with it."""
+    try:
+        text, spans = extract_main_content(payload)
+    except Exception as exc:
+        _log.warning("HTML extraction failed for %s", url, exc_info=True)
+        out.add(url, None, [], lang, "html", 1, 1, 0, False,
+                f"html_extract: {type(exc).__name__}: {exc}")
+        return
     for s in spans:  # tag in place; extract_main_content builds fresh dicts
         s["page_index"] = 0
     out.add(url, text, spans, lang, "html", 1, 0, 0, True, None)

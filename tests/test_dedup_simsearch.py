@@ -4,10 +4,15 @@ candidate quality vs brute force."""
 
 from __future__ import annotations
 
+import os
+import sys
+
+import pandas as pd
 import pytest
 
 from deepseek_ocr_2_spark.functions import textstats
 from deepseek_ocr_2_spark.operators import dedup, simsearch
+from deepseek_ocr_2_spark.operators.relational import load
 
 from .conftest import SF_SMALL
 
@@ -65,28 +70,64 @@ def test_shingle_sets_match_python_shingles(spark):
     assert got[6] == (["a b c", "b c a", "c a b", "a b c", "b c a"], 3)
 
 
-def test_jvm_band_keys_match_python_bands(spark):
-    """The JVM-built band keys over the batched kernel's signatures are
-    exactly ``textstats.minhash_bands(minhash_signature(...))`` for
-    every doc of sf0.01; docs under SHINGLE_K tokens get no key."""
-    from deepseek_ocr_2_spark.operators.relational import load
-
+def test_kernel_band_rows(spark):
+    """The MinHash kernel's (doc_id, band_key) rows over sf0.01 plus
+    four short docs: exactly BANDS bigint rows per doc of >= SHINGLE_K
+    tokens and none for shorter ones; per band index, two docs share a
+    key iff their ``minhash_bands(minhash_signature(...))`` strings are
+    equal; no key is shared across band indices (the self-join matches
+    keys alone); a 1-document batch gives the same keys as the full
+    batch."""
     docs = load(spark, SF_SMALL, "documents").select("doc_id", "text")
-    got = {}
-    for r in dedup._minhash_bands_df(docs).collect():
-        got.setdefault(r.doc_id, []).append(r.band_key)
+    pdf = pd.concat(
+        [
+            docs.toPandas(),
+            pd.DataFrame(
+                {"doc_id": [-1, -2, -3, -4], "text": [None, "", "a", "a, B"]}
+            ),
+        ],
+        ignore_index=True,
+    )
     want = {}
-    for r in docs.collect():
-        toks = textstats.tokenize(r.text or "")
+    for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+        toks = textstats.tokenize(text or "")
         if len(toks) >= dedup.SHINGLE_K:
             sig = textstats.minhash_signature(
                 toks, num_perm=dedup.NUM_PERM, k=dedup.SHINGLE_K
             )
-            want[r.doc_id] = textstats.minhash_bands(sig, bands=dedup.BANDS)
-    assert len(want) > 400
-    assert {d: sorted(k) for d, k in got.items()} == {
-        d: sorted(k) for d, k in want.items()
-    }
+            want[doc_id] = textstats.minhash_bands(sig, bands=dedup.BANDS)
+    assert len(want) == 500
+
+    rows = dedup._band_rows(pdf)
+    assert rows.dtypes.tolist() == ["int64", "int64"]
+    got = {}
+    for doc_id, key in zip(rows["doc_id"], rows["band_key"]):
+        got.setdefault(doc_id, []).append(key)
+    assert set(got) == set(want)
+    assert all(len(keys) == dedup.BANDS for keys in got.values())
+
+    shared = 0
+    band_of = {}
+    for b in range(dedup.BANDS):
+        by_str, by_key = {}, {}
+        for doc_id in want:
+            by_str.setdefault(want[doc_id][b], set()).add(doc_id)
+            by_key.setdefault(got[doc_id][b], set()).add(doc_id)
+            assert band_of.setdefault(got[doc_id][b], b) == b
+        groups = {frozenset(g) for g in by_str.values()}
+        assert groups == {frozenset(g) for g in by_key.values()}, b
+        shared += sum(len(g) > 1 for g in groups)
+    assert shared > 0  # planted near-dups share bands: not vacuous
+
+    for i in range(len(pdf)):
+        one = dedup._band_rows(pdf.iloc[i : i + 1])
+        assert one["band_key"].tolist() == got.get(pdf["doc_id"][i], [])
+
+    # the Spark stage yields the same rows
+    spark_rows = dedup._minhash_bands_df(docs).collect()
+    assert sorted((r.doc_id, r.band_key) for r in spark_rows) == sorted(
+        (d, k) for d, keys in got.items() for k in keys
+    )
 
 
 def test_simhash_pairs_respect_hamming_bound(spark):
@@ -741,3 +782,18 @@ def test_dup_heavy_gate_ngram_equals_minhash_at_production_constants(
     missing = expected - set(ng)
     assert not missing, f"copy-group pairs missing: {sorted(missing)[:5]}"
     assert all(ng[p] == 1.0 for p in expected)
+
+
+def test_band_recall_tool_pins_the_seed_35_miss():
+    """``tools/band_recall.py`` on the benchmark's seed 35 (2,154 planted
+    pairs): the pipeline's 32x4 layout misses the one known pair, 42x3
+    misses none."""
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    import band_recall
+
+    report = band_recall.main(["--seeds", "35", "--layouts", "32x4,42x3"])
+    assert (dedup.BANDS, dedup.NUM_PERM // dedup.BANDS) == (32, 4)
+    assert [(r["pairs"], r["missed"]) for r in report] == [
+        (2154, [[35, 581, 3336]]),
+        (2154, []),
+    ]

@@ -226,6 +226,74 @@ def test_null_payload_yields_failure_row(spark):
     assert res["https://x.org/b"].ok
 
 
+def test_extractor_exception_becomes_failure_row(monkeypatch):
+    """An exception from the HTML extractor on one payload gives that
+    row ``ok=false`` with no text and no spans, leaves its neighbours'
+    rows byte-identical, and is counted by the kernel's lineage tally,
+    no Spark: the task is not killed."""
+    import pandas as pd
+
+    from deepseek_ocr_2_spark.operators import extract
+
+    bad = b"<p>" + b"this payload makes the extractor raise " * 5 + b"</p>"
+    rows = [
+        ("https://g.org/a", b"<p>" + b"first page words " * 20 + b"</p>"),
+        ("https://g.org/bad", bad),
+        ("https://g.org/p", C.render_pdf_payload(3, "gamma " * 100)),
+        ("https://g.org/b", b"<p>" + b"second page words " * 20 + b"</p>"),
+    ]
+    batch = pd.DataFrame(
+        {"url": [u for u, _ in rows], "html": [p for _, p in rows],
+         "lang": ["en"] * len(rows)}
+    )
+
+    class Tally:
+        def add(self, update):
+            self.update = update
+
+    class Ctx:
+        @staticmethod
+        def get():
+            return Ctx
+
+        @staticmethod
+        def partitionId():
+            return 0
+
+    def run():
+        tally = Tally()
+        kernel = extract.make_extract_kernel(ExtractConfig(), tally)
+        out = pd.concat(list(kernel(iter([batch])))).reset_index(drop=True)
+        return out, tally.update[0]
+
+    def flaky(payload):
+        if payload == bad:
+            raise RecursionError("maximum recursion depth exceeded")
+        return extract_main_content(payload)
+
+    monkeypatch.setattr(extract, "TaskContext", Ctx)
+    clean, clean_counts = run()
+    monkeypatch.setattr(extract, "extract_main_content", flaky)
+    out, counts = run()
+
+    assert out["url"].tolist() == clean["url"].tolist()
+    i = out.index[out["url"] == "https://g.org/bad"][0]
+    r = out.loc[i]
+    assert clean.loc[i, "ok"] and not r["ok"]
+    assert r["error"] == (
+        "html_extract: RecursionError: maximum recursion depth exceeded"
+    )
+    assert r["extracted_text"] is None and r["spans"] == []
+    assert (r["payload_type"], r["total_pages"], r["failed_pages"]) == (
+        "html", 1, 1
+    )
+    rest = out.drop(index=i)
+    assert repr(rest.to_dict("list")) == repr(clean.drop(index=i).to_dict("list"))
+    # doc_count, extraction_failure_count, failed_page_count, ...
+    assert clean_counts[:3] == (4, 0, 0)
+    assert counts == (4, 1, 1) + clean_counts[3:]
+
+
 def test_kernel_aligns_pages_to_their_own_rows():
     """One pandas batch mixing every row kind through the kernel, no
     Spark: each output row must carry its own doc's pages, in order."""

@@ -8,6 +8,7 @@ from deepseek_ocr_2_spark.functions.textstats import (
     fingerprint,
     hamming64,
     jaccard,
+    minhash_band_keys,
     minhash_bands,
     minhash_signature,
     minhash_signatures,
@@ -175,6 +176,44 @@ class TestMinHash:
                                   seed=3).tolist() == [
             minhash_signature(["p", "q", "r", "s"], num_perm=16, seed=3)
         ]
+
+    def test_band_keys_are_a_pure_function_of_band_and_index(self):
+        """Equal band values at one index give equal int64 keys, a
+        changed value changes only its band's key, the same values at
+        two band indices give two keys, and another process (another
+        ``hash()`` salt) computes the same keys."""
+        import json
+        import os
+        import subprocess
+        import sys
+
+        import numpy as np
+
+        sig = minhash_signatures(
+            [tokenize("the quick brown fox jumps over the lazy dog")] * 3
+        )
+        sig[1, 13] += 1  # band 3 of 32x4
+        sig[2, 4:8] = sig[2, 0:4]  # band 1 := band 0's values
+        keys = minhash_band_keys(sig, 32)
+        assert keys.dtype == np.int64 and keys.shape == (3, 32)
+        assert (keys[0] != keys[1]).tolist() == [b == 3 for b in range(32)]
+        assert keys[2, 0] == keys[0, 0] and keys[2, 1] != keys[2, 0]
+        assert len(set(keys[0].tolist())) == 32
+        code = (
+            "import json, sys; import numpy as np;"
+            "from deepseek_ocr_2_spark.functions.textstats import"
+            " minhash_band_keys;"
+            "sig = np.array(json.loads(sys.stdin.read()), dtype=np.int64);"
+            "print(json.dumps(minhash_band_keys(sig, 32).tolist()))"
+        )
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        out = subprocess.run(
+            [sys.executable, "-c", code],
+            input=json.dumps(sig.tolist()),
+            capture_output=True, text=True, check=True, cwd=root,
+            env={**os.environ, "PYTHONHASHSEED": "12345"},
+        ).stdout
+        assert json.loads(out) == keys.tolist()
 
 
 class TestSimHash:

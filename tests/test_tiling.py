@@ -1,7 +1,5 @@
 """Tiling / visual-token arithmetic tests (pure, pixel-free)."""
 
-import math
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
