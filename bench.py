@@ -46,13 +46,14 @@ METHODOLOGY CHANGE (round 2): hot-host detection moved out of the timed
 window too (``detect_hot_hosts`` runs once per snapshot, the production
 statistics pattern), so round-2+ headline numbers are NOT directly
 comparable to the round-1 number, which included that aggregation pass
-per run.  The scaling harness (``tools/scaling_bench.py``) has used
-static hot hosts in every round, so its efficiency numbers ARE
-round-comparable.
+per run.  The round-7 scaling harness used static hot hosts in every
+round, so its efficiency numbers ARE round-comparable.
 
-Scaling-efficiency evidence (N vs 4N core-pinned pairs) is produced by
-``tools/scaling_bench.py`` which writes ``BENCH/BASELINE.md``; this file
-stays fast enough for a per-round driver run.
+Scaling-efficiency evidence (N vs 4N core-pinned pairs) is the round-7
+record in ``BENCH/BASELINE.md`` and ``BENCH/scaling.json``; the harness
+that wrote them was removed because it cannot pin N vs 4N cores on a
+host with fewer than 16, and re-measuring waits for such a host.  This
+file stays fast enough for a per-round driver run.
 """
 
 from __future__ import annotations
@@ -101,7 +102,7 @@ def build_session(cpus: int):
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2000")
         # tmpfs shuffle dir when available: the local-mode analog of the
         # fast local SSDs a real cluster's shuffle service assumes —
-        # A/B-verified knob from the scaling bench (BENCH/BASELINE.md
+        # A/B-verified knob from the round-7 scaling runs (BENCH/BASELINE.md
         # measurement-config section); falls back to default tmp dirs
         .config("spark.local.dir", _local_dir())
         .getOrCreate()

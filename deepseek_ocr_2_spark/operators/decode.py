@@ -32,7 +32,6 @@ from dataclasses import dataclass
 from typing import Callable, Dict, Iterator, List, Sequence, Tuple
 
 from ..functions.tiling import num_image_tokens
-from .. import functions  # noqa: F401  (package import sanity)
 
 PDF_MAGIC = b"%PDF-STUB1\n"
 

@@ -8,9 +8,9 @@
 * ``lsh_ann_topk``     — the scale path: random-hyperplane LSH buckets
   (deterministic fixed-seed hyperplanes broadcast to executors, dot
   products via a vectorized pandas UDF on numpy), candidates reranked
-  exactly.  At 10^12 rows the brute-force scan is one full pass per
-  query; LSH touches only matching buckets — multi-probe over Hamming-1
-  neighbors keeps recall high.
+  exactly.  The bucket table is one linear scan per call; the exact
+  rerank touches only the probed buckets' vectors, and multi-probe
+  over Hamming-2 neighbors keeps recall high.
 
 Determinism: cosine is computed in float64 in one fixed order (array
 index order) in both engines; results round to 6 decimals and tie-break
@@ -36,7 +36,7 @@ QUERY_VEC_ID = 0
 # floor of 6 planes -> 64 buckets: at 500 test vectors each bucket
 # holds ~8, and 1+k multi-probe buckets yield a ~10% candidate slice.
 N_HYPERPLANES = 6
-# target expected bucket size for the ANN index; plane count grows as
+# target expected bucket size for the ANN buckets; plane count grows as
 # ceil(log2(n / target)) so the probed slice stays O(target) per bucket
 # instead of O(n) (VERDICT r01 noted the fixed 64-bucket layout)
 ANN_TARGET_BUCKET = 64
@@ -44,7 +44,7 @@ LSH_SEED = 7
 
 
 def ann_plane_count(n_vectors: int) -> int:
-    """Corpus-size-aware hyperplane count for the ANN bucket index."""
+    """Corpus-size-aware hyperplane count for the ANN bucket table."""
     import math
 
     if n_vectors <= ANN_TARGET_BUCKET:
@@ -178,30 +178,33 @@ def knn_self_join_oracle() -> str:
 NEAR_DUP_COSINE = 0.35
 
 
-def _exact_pair_scan(emb: DataFrame, threshold: float) -> DataFrame:
-    """All-pairs exact cosine >= threshold over any (vec_id, embedding)
-    frame — the O(n²) plan, shared by the oracle twin and the router's
-    low-threshold fallback branch."""
-    # norms precomputed once per VECTOR, not once per pair (round 7,
-    # guide §1.2): the float64 product ``na * nb`` is unchanged, so the
-    # rounded cosine is bit-identical to computing both norms in-pair —
-    # but each side's fold runs n times instead of n² times.
+def _pair_sides(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The two aliased sides of a pair join over a (vec_id, embedding)
+    frame: ``(vec_a, ea, na)`` and ``(vec_b, eb, nb)``.
+
+    Norms are precomputed once per VECTOR, not once per pair (round 7,
+    guide §1.2): the float64 product ``na * nb`` is unchanged, so the
+    rounded cosine is bit-identical to computing both norms in-pair —
+    but each side's fold runs n times instead of n² times."""
     withn = emb.select(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     )
-    a = withn.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
+    return tuple(
+        withn.select(
+            F.col("vec_id").alias(f"vec_{s}"),
+            F.col("embedding").alias(f"e{s}"),
+            F.col("nrm").alias(f"n{s}"),
+        )
+        for s in "ab"
     )
-    b = withn.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
+
+
+def _scored_pairs(pairs: DataFrame, threshold: float) -> DataFrame:
+    """The shared tail of both near-dup plans: rounded exact cosine of
+    each joined ``(vec_a, ea, na) x (vec_b, eb, nb)`` row, kept at
+    >= threshold, in (vec_a, vec_b) order."""
     return (
-        a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .select(
+        pairs.select(
             "vec_a",
             "vec_b",
             F.round(
@@ -212,6 +215,14 @@ def _exact_pair_scan(emb: DataFrame, threshold: float) -> DataFrame:
         .filter(F.col("cosine") >= threshold)
         .orderBy("vec_a", "vec_b")
     )
+
+
+def _exact_pair_scan(emb: DataFrame, threshold: float) -> DataFrame:
+    """All-pairs exact cosine >= threshold over any (vec_id, embedding)
+    frame — the O(n²) plan, shared by the oracle twin and the router's
+    low-threshold fallback branch."""
+    a, b = _pair_sides(emb)
+    return _scored_pairs(a.join(b, F.col("vec_a") < F.col("vec_b")), threshold)
 
 
 def embedding_near_dup_pairs(
@@ -249,23 +260,25 @@ def embedding_near_dup_oracle(threshold: float = NEAR_DUP_COSINE) -> str:
 # approaches all-pairs.  Used by BOTH the embedding_near_dup_lsh router
 # (lsh_prunes_at) and banded_lsh_keys' RuntimeWarning.
 _PRUNE_ADMIT_CUTOFF = 0.5
+# band_params' design point: per-pair miss probability at the threshold
+# and the band budget that bounds the band self-join's row fan-out
+BAND_MISS_PROB = 1e-5
+MAX_BANDS = 64
 
 
 def _random_admit_rate(k: int, bands: int) -> float:
     return 1.0 - (1.0 - 0.5**k) ** bands
 
 
-def band_params(
-    threshold: float, miss_prob: float = 1e-5, max_bands: int = 64
-) -> tuple[int, int]:
+def band_params(threshold: float) -> tuple[int, int]:
     """(bits-per-band k, band count L) for banded sign-LSH at a cosine
     threshold, from the standard collision model: a random hyperplane
     splits a pair at angle θ with probability θ/π, so a pair at exactly
     ``threshold`` agrees on one bit with p = 1 - acos(t)/π and survives
     a k-bit band with p^k; L bands drive the per-pair miss probability
-    to (1-p^k)^L <= miss_prob.  k is pushed as high as the L budget
-    allows — larger k is what prunes non-duplicates (a random pair
-    passes a band with 0.5^k).
+    to (1-p^k)^L <= BAND_MISS_PROB.  k is pushed as high as the
+    MAX_BANDS budget allows — larger k is what prunes non-duplicates
+    (a random pair passes a band with 0.5^k).
 
     Scale honesty: at low thresholds (t≈0.35, p≈0.61) no (k, L) prunes —
     p is too close to the 0.5 of random pairs, so candidate generation
@@ -291,17 +304,19 @@ def band_params(
     k = 1
     while k < MAX_K:
         nxt = k + 1
-        need = math.ceil(math.log(miss_prob) / math.log(1.0 - p**nxt))
-        if need > max_bands:
+        need = math.ceil(
+            math.log(BAND_MISS_PROB) / math.log(1.0 - p**nxt)
+        )
+        if need > MAX_BANDS:
             break
         k = nxt
-    L = math.ceil(math.log(miss_prob) / math.log(1.0 - p**k))
-    return k, min(L, max_bands)
+    L = math.ceil(math.log(BAND_MISS_PROB) / math.log(1.0 - p**k))
+    return k, min(L, MAX_BANDS)
 
 
-def _banded_planes(dim: int, k: int, bands: int, seed: int) -> np.ndarray:
-    rng = np.random.RandomState(seed)
-    return rng.standard_normal((bands * k, dim)).astype(np.float64)
+def _hyperplanes(dim: int, n_planes: int) -> np.ndarray:
+    rng = np.random.RandomState(LSH_SEED)
+    return rng.standard_normal((n_planes, dim)).astype(np.float64)
 
 
 _BAND_KEY_SCHEMA = StructType(
@@ -313,9 +328,7 @@ _BAND_KEY_SCHEMA = StructType(
 )
 
 
-def banded_lsh_keys(
-    emb: DataFrame, threshold: float, seed: int = LSH_SEED
-) -> DataFrame:
+def banded_lsh_keys(emb: DataFrame, threshold: float) -> DataFrame:
     """(vec_id, band, key) rows — L rows per vector, one vectorized
     matmul per Arrow batch.  The (band, key) pair is the self-join key
     for candidate generation; at scale expected bucket size is
@@ -352,7 +365,7 @@ def banded_lsh_keys(
                 [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
             )
             if planes is None:
-                planes = _banded_planes(mat.shape[1], k, bands, seed)
+                planes = _hyperplanes(mat.shape[1], bands * k)
             bits = (mat @ planes.T) > 0  # [n, bands*k]
             keys = bits.reshape(len(mat), bands, k) @ pw  # [n, bands]
             yield pd.DataFrame(
@@ -373,15 +386,13 @@ def banded_lsh_keys(
     )
 
 
-def lsh_candidate_pairs(
-    emb: DataFrame, threshold: float, seed: int = LSH_SEED
-) -> DataFrame:
+def lsh_candidate_pairs(emb: DataFrame, threshold: float) -> DataFrame:
     """Distinct candidate (vec_a < vec_b) pairs sharing any band bucket."""
     from .cachereg import persist_tracked
 
     # both join sides read the keys; persist so the signature matmul
     # runs once (tracked — callers release via cachereg.release_caches())
-    keys = persist_tracked(banded_lsh_keys(emb, threshold, seed))
+    keys = persist_tracked(banded_lsh_keys(emb, threshold))
     a = keys.select(
         F.col("vec_id").alias("vec_a"), "band", "key"
     )
@@ -424,7 +435,7 @@ def embedding_near_dup_lsh(
       rerank — three linear stages that survive 10^12 rows: (1) one
       scan emitting L band keys per vector, (2) a self-join on
       (band, key) whose buckets are O(n·0.5^k), (3) an exact rerank on
-      the candidate pairs only.  With ``band_params``'s miss_prob=1e-5
+      the candidate pairs only.  With ``band_params``' BAND_MISS_PROB
       the candidate set covers every pair >= threshold with per-pair
       probability ~1 (recall 1.0 on the fixed-seed testdata,
       pytest-gated).
@@ -449,35 +460,8 @@ def banded_near_dup_pairs(emb: DataFrame, threshold: float) -> DataFrame:
     (vec_id, embedding) frame — three linear stages (band keys,
     (band, key) self-join, rerank on candidates only)."""
     cand = lsh_candidate_pairs(emb, threshold)
-    # norms precomputed once per vector before the joins (round 7,
-    # guide §1.2) — same float64 product, bit-identical rounded cosine
-    withn = emb.select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
-    )
-    ea = withn.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    eb = withn.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    return (
-        cand.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")),
-                6,
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .orderBy("vec_a", "vec_b")
-    )
+    ea, eb = _pair_sides(emb)
+    return _scored_pairs(cand.join(ea, "vec_a").join(eb, "vec_b"), threshold)
 
 
 def near_dup_router(emb: DataFrame, threshold: float) -> DataFrame:
@@ -607,32 +591,6 @@ def embedding_near_dup_scale_oracle() -> str:
     """
 
 
-def _hyperplanes(dim: int, n_planes: int = N_HYPERPLANES) -> np.ndarray:
-    rng = np.random.RandomState(LSH_SEED)
-    return rng.standard_normal((n_planes, dim)).astype(np.float64)
-
-
-def _bucket_keys(mat: np.ndarray, planes: np.ndarray) -> List[str]:
-    """THE bucket-bit computation — one definition shared by the index
-    build kernel (``lsh_buckets``) and the driver-side query path
-    (``lsh_ann_topk_indexed``), so sign decisions on near-zero plane
-    dot products never come from two differently-WRITTEN expressions
-    (ADVICE r04; made structural after code review r05 showed an
-    expression-shape copy is not a pin).
-
-    Residual caveat (ADVICE r05): sharing one expression removes the
-    source-level divergence class but BLAS may still dispatch
-    differently-rounding gemm kernels for different operand shapes
-    (a 1-row query matmul vs the n-row build matmul), so the guarantee
-    is shape-dependent, not absolute.  The query path passes
-    ``vec[None, :]`` to keep the call a gemm like the builder's, and
-    the in-session/indexed output-equality test pins the current
-    corpus+planes; a vector whose plane dot product is within one ulp
-    of zero could in principle still flip between shapes."""
-    signs = (mat @ planes.T) > 0  # [n, planes]
-    return ["".join("1" if s else "0" for s in row) for row in signs]
-
-
 _BUCKET_SCHEMA = StructType(
     [
         StructField("vec_id", LongType(), False),
@@ -641,62 +599,23 @@ _BUCKET_SCHEMA = StructType(
 )
 
 
-def default_plane_count(sf_dir: str) -> int:
-    """The ONE source of the corpus-sized plane-count default, shared
-    by ``lsh_buckets`` and ``build_ann_index`` so a freshly built index
-    and the live query can never silently disagree on plane count
-    (the seed check alone would not catch that).  Row count comes from
-    parquet footer statistics, never a Spark ``count()`` job; the cap
-    of 62 keeps a bucket key packable into an int64 if a caller ever
-    converts the bit string."""
-    from ..sources.stats import parquet_row_count
-
-    return min(62, ann_plane_count(parquet_row_count(sf_dir, "embeddings")))
-
-
-def _rerank_topk(emb: DataFrame, cand: DataFrame) -> DataFrame:
-    """Exact cosine rerank of a candidate vec_id set against the query
-    vector: the shared tail of ``lsh_ann_topk`` and
-    ``lsh_ann_topk_indexed`` — one definition, so tie-breaking,
-    rounding, and TOPK can never drift between the in-session and
-    indexed paths (their output-equality test certifies THIS)."""
-    # query norm computed once in the 1-row broadcast side, not per
-    # candidate row (round 7, guide §1.2) — same float64 product, so
-    # the rounded cosine (and hence the top-k set) is bit-identical
-    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("qvec")
-    ).select("qvec", _norm(F.col("qvec")).alias("qnorm"))
-    return (
-        emb.join(cand, "vec_id", "left_semi")
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(
-                _dot(F.col("embedding"), F.col("qvec"))
-                / (_norm(F.col("embedding")) * F.col("qnorm")),
-                6,
-            ).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(TOPK)
-    )
-
-
-def lsh_buckets(
-    spark: SparkSession, sf_dir: str, n_planes: int | None = None
-) -> DataFrame:
+def lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane sign buckets, vectorized over Arrow batches.
 
-    ``n_planes`` defaults to ``ann_plane_count(row count)`` — bucket
-    count tracks corpus size so expected bucket occupancy stays
+    The plane count is ``ann_plane_count(row count)`` — bucket count
+    tracks corpus size so expected bucket occupancy stays
     ~ANN_TARGET_BUCKET.  The row count comes from snapshot statistics
     (parquet footers, a driver-side metadata read), NOT a Spark
     ``count()`` job at plan-build time (VERDICT r02 "What's wrong" #2).
+    The cap of 62 keeps a bucket key packable into an int64 if a caller
+    ever converts the bit string.
     """
+    from ..sources.stats import parquet_row_count
+
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    if n_planes is None:
-        n_planes = default_plane_count(sf_dir)
+    n_planes = min(
+        62, ann_plane_count(parquet_row_count(sf_dir, "embeddings"))
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         planes = None
@@ -708,7 +627,8 @@ def lsh_buckets(
             )
             if planes is None:
                 planes = _hyperplanes(mat.shape[1], n_planes)
-            keys = _bucket_keys(mat, planes)
+            signs = (mat @ planes.T) > 0  # [n, planes]
+            keys = ["".join("1" if s else "0" for s in row) for row in signs]
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"].astype("int64"), "bucket": keys}
             )
@@ -717,7 +637,7 @@ def lsh_buckets(
     return emb.mapInPandas(run, schema=_BUCKET_SCHEMA)
 
 
-def _multi_probes(bucket_bits: str, max_hamming: int = 1) -> List[str]:
+def _multi_probes(bucket_bits: str, max_hamming: int) -> List[str]:
     """All bucket keys within Hamming ``max_hamming`` of the query's.
 
     The standard multi-probe LSH recall/cost knob (Lv et al. 2007):
@@ -744,12 +664,11 @@ def lsh_ann_topk(
     """ANN top-10 for the query vector via multi-probe LSH + exact rerank.
 
     Plan shape: bucket table (linear scan, one narrow stage) -> filter to
-    the query's probe buckets (partition-prunable at scale if the bucket
-    table is written partitioned by bucket prefix) -> exact cosine rerank
-    on the candidate slice only.  ``probe_hamming`` is the recall/cost
-    knob: more probe levels scan a larger candidate slice (recall-vs-
-    probes curve pinned in tests); it is APPROXIMATE by design at every
-    setting — exactness needs ``cosine_topk``'s full scan.
+    the query's probe buckets -> exact cosine rerank on the candidate
+    slice only.  ``probe_hamming`` is the recall/cost knob: more probe
+    levels scan a larger candidate slice (recall-vs-probes curve pinned
+    in tests); it is APPROXIMATE by design at every setting — exactness
+    needs ``cosine_topk``'s full scan.
 
     Default probe depth 2: with ``n_planes`` tracking log2(corpus), the
     Hamming<=2 probe set is ``1 + n + n(n-1)/2`` of ``2^n`` buckets —
@@ -761,184 +680,31 @@ def lsh_ann_topk(
     emb = load(spark, sf_dir, "embeddings")
     # the bucket table feeds TWO consumers (the 1-row query-bucket
     # fetch below and the candidate filter in the returned plan) —
-    # persist so the hyperplane matmul runs once (VERDICT r03 #3).  At
-    # scale this table is a precomputed index written partitioned by
-    # bucket prefix; the persist is its local stand-in.
+    # persist so the hyperplane matmul runs once (VERDICT r03 #3)
     buckets = persist_tracked(lsh_buckets(spark, sf_dir))
     qrow = (
         buckets.filter(F.col("vec_id") == QUERY_VEC_ID).select("bucket").collect()
     )
     probes = _multi_probes(qrow[0]["bucket"], probe_hamming)
     cand = buckets.filter(F.col("bucket").isin(probes)).select("vec_id")
-    return _rerank_topk(emb, cand)
-
-
-# ---------------------------------------------------------------------------
-# Persisted ANN index: the bucket table written as a partitioned
-# parquet layout so queries prune to their probe buckets' directories
-# (the at-scale form the lsh_ann_topk docstring promises; VERDICT r03
-# noted the in-session persist is only its local stand-in).
-
-ANN_PREFIX_BITS = 4  # partition key = first 4 bucket bits (16 dirs)
-# partition VALUES carry a 'p' sigil ('p0101'): a bare bit string like
-# '0101' is type-inferred back as IntegerType (101) on read, making
-# prefix matching depend on implicit string->int casts of the probe
-# literals — the sigil pins the partition column to StringType
-_ANN_PREFIX_SIGIL = "p"
-_ANN_META = "_ann_meta.json"
-
-
-def build_ann_index(
-    spark: SparkSession, sf_dir: str, index_dir: str,
-    n_planes: int | None = None,
-) -> int:
-    """Write the LSH bucket table as a reusable on-disk ANN index,
-    partitioned by the bucket's first ``ANN_PREFIX_BITS`` bits.
-
-    Build cost is ONE linear scan of the embeddings (the same matmul
-    kernel as ``lsh_buckets``); after that every query touches only the
-    partitions holding its probe buckets — Spark plans
-    ``PartitionFilters`` on ``bucket_prefix`` and never opens the other
-    directories.  Partitioning by a fixed-width prefix instead of the
-    full bucket keeps directory count bounded (2^4) while still pruning
-    ~(probes/2^bits) of the data for multi-probe queries.  A sidecar
-    ``_ann_meta.json`` records (n_planes, seed) so queries recompute
-    the query vector's bucket with the exact planes that built the
-    index.  The sidecar also records a corpus fingerprint (the
-    embeddings footer row count) so a query pointed at an index built
-    from a DIFFERENT snapshot raises instead of silently returning a
-    shrunken/mismatched candidate set (ADVICE r04).  Returns the plane
-    count used.
-    """
-    import json as _json
-    import os as _os
-
-    if n_planes is None:
-        n_planes = default_plane_count(sf_dir)
-    (
-        lsh_buckets(spark, sf_dir, n_planes)
-        .withColumn(
-            "bucket_prefix",
-            F.concat(
-                F.lit(_ANN_PREFIX_SIGIL),
-                F.substring("bucket", 1, ANN_PREFIX_BITS),
-            ),
+    # query norm computed once in the 1-row broadcast side, not per
+    # candidate row (round 7, guide §1.2) — same float64 product, so
+    # the rounded cosine (and hence the top-k set) is bit-identical
+    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
+        F.col("embedding").alias("qvec")
+    ).select("qvec", _norm(F.col("qvec")).alias("qnorm"))
+    return (
+        emb.join(cand, "vec_id", "left_semi")
+        .filter(F.col("vec_id") != QUERY_VEC_ID)
+        .crossJoin(F.broadcast(q))
+        .select(
+            "vec_id",
+            F.round(
+                _dot(F.col("embedding"), F.col("qvec"))
+                / (_norm(F.col("embedding")) * F.col("qnorm")),
+                6,
+            ).alias("cosine"),
         )
-        .write.partitionBy("bucket_prefix")
-        .mode("overwrite")
-        .parquet(index_dir)
+        .orderBy(F.desc("cosine"), F.asc("vec_id"))
+        .limit(TOPK)
     )
-    with open(_os.path.join(index_dir, _ANN_META), "w") as f:
-        _json.dump(
-            {
-                "n_planes": n_planes,
-                "seed": LSH_SEED,
-                "fingerprint": _corpus_fingerprint(sf_dir),
-            },
-            f,
-        )
-    return n_planes
-
-
-def _corpus_fingerprint(sf_dir: str) -> dict:
-    """Footer-only corpus identity for the ANN index sidecar: row
-    count + total compressed bytes + max vec_id.  A row count alone
-    accepts any equal-cardinality regeneration (code review r05);
-    content edits at equal cardinality almost always move compressed
-    sizes, and id reshuffles move the max.  Still not a content hash —
-    a deliberate collision is possible — but it catches the realistic
-    regenerated-/re-seeded-snapshot class without scanning data."""
-    from ..sources.stats import (
-        parquet_column_max,
-        parquet_row_count,
-        parquet_total_bytes,
-    )
-
-    return {
-        "rows": parquet_row_count(sf_dir, "embeddings"),
-        "bytes": parquet_total_bytes(sf_dir, "embeddings"),
-        "max_vec_id": parquet_column_max(sf_dir, "embeddings", "vec_id"),
-    }
-
-
-def lsh_ann_topk_indexed(
-    spark: SparkSession, sf_dir: str, index_dir: str, probe_hamming: int = 2
-) -> DataFrame:
-    """``lsh_ann_topk`` against a prebuilt ``build_ann_index`` layout.
-
-    The query vector's bucket is computed DRIVER-SIDE (one pushdown-
-    filtered row fetch + a numpy dot with the index's recorded planes)
-    — no scan of the index to find it.  The candidate read then carries
-    both the ``bucket_prefix`` partition predicate (directory pruning,
-    plan-gated) and the exact bucket predicate (row-group pruning via
-    parquet min/max on the sorted-ish bucket column).  Identical output
-    to ``lsh_ann_topk`` at the same probe depth by construction: same
-    planes, same probe set, same exact rerank.
-    """
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(index_dir, _ANN_META)) as f:
-        meta = _json.load(f)
-    if meta["seed"] != LSH_SEED:
-        raise ValueError(
-            f"index at {index_dir} built with seed {meta['seed']}, "
-            f"library seed is {LSH_SEED}"
-        )
-    fp = _corpus_fingerprint(sf_dir)
-    # ADVICE r05: a sidecar WITHOUT a fingerprint (pre-r05 index) and a
-    # None max_vec_id (corpus lacking footer stats — where None == None
-    # would silently weaken the check to rows+bytes) each get their own
-    # explicit error, mirroring the fail-closed planted-id guard,
-    # instead of the misleading generic "different snapshot" message.
-    # ADVICE r06: a fingerprint dict that simply LACKS the max_vec_id
-    # key is a stale sidecar format, not a statistics problem — fold it
-    # into the rebuild error rather than misattributing it
-    if "fingerprint" not in meta or "max_vec_id" not in meta["fingerprint"]:
-        raise ValueError(
-            f"index at {index_dir} predates the current corpus "
-            f"fingerprint format (missing "
-            f"{'fingerprint sidecar' if 'fingerprint' not in meta else 'max_vec_id in its fingerprint'}"
-            f") — rebuild the index"
-        )
-    if fp["max_vec_id"] is None or meta["fingerprint"]["max_vec_id"] is None:
-        # ADVICE r06: report BOTH sides' status so the message never
-        # blames the live table for a stat-less build-time corpus
-        sides = []
-        if fp["max_vec_id"] is None:
-            sides.append(f"the live embeddings table at {sf_dir}")
-        if meta["fingerprint"]["max_vec_id"] is None:
-            sides.append("the corpus the index was built from")
-        raise ValueError(
-            f"cannot verify index identity: {' and '.join(sides)} "
-            f"carr{'y' if len(sides) > 1 else 'ies'} no parquet footer "
-            f"statistics for vec_id — fingerprint comparison would "
-            f"silently degrade to rows+bytes; rebuild from a snapshot "
-            f"with statistics"
-        )
-    if meta["fingerprint"] != fp:
-        raise ValueError(
-            f"index at {index_dir} was built from a different snapshot "
-            f"(index fingerprint {meta.get('fingerprint')}, live corpus "
-            f"{fp}) — rebuild the index for this snapshot"
-        )
-    emb = load(spark, sf_dir, "embeddings")
-    qvec = np.asarray(
-        emb.filter(F.col("vec_id") == QUERY_VEC_ID)
-        .select("embedding")
-        .collect()[0]["embedding"],
-        dtype=np.float64,
-    )
-    planes = _hyperplanes(len(qvec), meta["n_planes"])
-    # the SAME function the build kernel ran — one code path, one
-    # rounding behavior for the sign decisions (ADVICE r04 / review r05)
-    qbits = _bucket_keys(qvec[None, :], planes)[0]
-    probes = _multi_probes(qbits, probe_hamming)
-    prefixes = sorted(
-        {_ANN_PREFIX_SIGIL + p[:ANN_PREFIX_BITS] for p in probes}
-    )
-    idx = spark.read.parquet(index_dir)
-    cand = idx.filter(
-        F.col("bucket_prefix").isin(prefixes) & F.col("bucket").isin(probes)
-    ).select("vec_id")
-    return _rerank_topk(emb, cand)

@@ -89,13 +89,6 @@ def parquet_column_max(sf_dir: str, name: str, column: str):
     return best
 
 
-def parquet_total_bytes(sf_dir: str, name: str) -> int:
-    """Sum of the table's file sizes on disk — a cheap second
-    fingerprint dimension (content edits at equal cardinality almost
-    always move compressed sizes)."""
-    return sum(os.path.getsize(fp) for fp in _parquet_files(sf_dir, name))
-
-
 def parquet_scan_stats(sf_dir: str, name: str) -> tuple:
     """(total row groups, total file bytes, total rows) from footers.
 

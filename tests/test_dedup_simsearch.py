@@ -413,215 +413,19 @@ def test_multi_probe_enumeration():
     assert len(probes2) == 1 + 4 + 6
 
 
-class TestAnnIndex:
-    """Persisted partitioned ANN index (the at-scale form of the
-    bucket table: one build scan, then per-query directory pruning)."""
+def test_parquet_column_max_rejects_non_integer_columns():
+    """ADVICE r05: string/binary parquet min/max may be truncated
+    by the writer, so the footer fold is only exact for integer
+    physical types — a string-column caller must fail loudly."""
+    import pytest as _pytest
 
-    def test_indexed_equals_in_session_topk(self, spark, tmp_path):
-        from deepseek_ocr_2_spark.operators import simsearch
-        from deepseek_ocr_2_spark.operators.cachereg import release_caches
+    from deepseek_ocr_2_spark.sources.stats import parquet_column_max
 
-        from .conftest import SF_SMALL
+    from .conftest import SF_SMALL
 
-        idx = str(tmp_path / "ann_idx")
-        n_planes = simsearch.build_ann_index(spark, SF_SMALL, idx)
-        assert n_planes >= simsearch.N_HYPERPLANES
-        live = simsearch.lsh_ann_topk(spark, SF_SMALL).collect()
-        release_caches()
-        indexed = simsearch.lsh_ann_topk_indexed(
-            spark, SF_SMALL, idx
-        ).collect()
-        # same planes + same probe set + same exact rerank -> identical
-        assert [tuple(r) for r in indexed] == [tuple(r) for r in live]
-
-    def test_index_read_prunes_partitions(self, spark, tmp_path):
-        import re
-
-        from pyspark.sql import functions as F
-
-        from deepseek_ocr_2_spark.operators import simsearch
-
-        from .conftest import SF_SMALL
-
-        idx = str(tmp_path / "ann_idx")
-        simsearch.build_ann_index(spark, SF_SMALL, idx)
-        df = simsearch.lsh_ann_topk_indexed(spark, SF_SMALL, idx)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # the INDEX scan (not the embeddings scan, whose bracket is
-        # empty) must carry the bucket_prefix partition predicate
-        filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
-        pf = [f for f in filters if "bucket_prefix" in f]
-        assert pf, plan[:2000]
-        # and directory pruning is real: Hamming<=2 probes flip at most
-        # 2 of the 4 prefix bits, so <= 1+4+6 = 11 of the 16 prefix
-        # dirs can appear in the partition predicate's IN-set
-        # (DataFrame.inputFiles() ignores partition pruning, so assert
-        # on the predicate itself; the 'p' sigil pins the partition
-        # values to StringType — a bare '0101' would be type-inferred
-        # back to the integer 101 on read)
-        in_set = re.findall(
-            r"\bp[01]{%d}\b" % simsearch.ANN_PREFIX_BITS, pf[0]
-        )
-        assert 0 < len(set(in_set)) <= 11, pf[0]
-
-    def test_index_seed_mismatch_raises(self, spark, tmp_path):
-        import json
-        import os
-
-        import pytest as _pytest
-
-        from deepseek_ocr_2_spark.operators import simsearch
-
-        from .conftest import SF_SMALL
-
-        idx = str(tmp_path / "ann_idx")
-        simsearch.build_ann_index(spark, SF_SMALL, idx)
-        meta_path = os.path.join(idx, "_ann_meta.json")
-        meta = json.load(open(meta_path))
-        meta["seed"] = 999
-        json.dump(meta, open(meta_path, "w"))
-        with _pytest.raises(ValueError, match="seed"):
-            simsearch.lsh_ann_topk_indexed(spark, SF_SMALL, idx)
-
-    def test_index_corpus_mismatch_raises(self, spark, tmp_path):
-        """An index built from one snapshot must refuse to serve a
-        different corpus (ADVICE r04: the left-semi candidate join
-        would silently shrink/mismatch instead of erroring)."""
-        import json
-        import os
-
-        import pytest as _pytest
-
-        from deepseek_ocr_2_spark.operators import simsearch
-
-        from .conftest import SF_SMALL
-
-        idx = str(tmp_path / "ann_idx")
-        simsearch.build_ann_index(spark, SF_SMALL, idx)
-        meta_path = os.path.join(idx, "_ann_meta.json")
-        meta = json.load(open(meta_path))
-        assert set(meta["fingerprint"]) == {"rows", "bytes", "max_vec_id"}
-        # any single dimension moving must trip the check: an equal-
-        # cardinality regenerated corpus moves bytes, an id reshuffle
-        # moves max_vec_id (code review r05 strengthened the row-count-
-        # only fingerprint)
-        for dim in ("rows", "bytes", "max_vec_id"):
-            bad = dict(meta, fingerprint=dict(meta["fingerprint"]))
-            bad["fingerprint"][dim] += 1
-            json.dump(bad, open(meta_path, "w"))
-            with _pytest.raises(ValueError, match="snapshot"):
-                simsearch.lsh_ann_topk_indexed(spark, SF_SMALL, idx)
-
-    def test_index_fingerprint_fail_closed_branches(self, spark, tmp_path):
-        """ADVICE r05: the two silent-degradation cases get their own
-        explicit errors instead of the generic 'different snapshot'
-        message — (a) a pre-fingerprint sidecar, (b) a None max_vec_id
-        (no footer stats), where None == None would quietly weaken the
-        fingerprint to rows+bytes in exactly the case the planted-id
-        guard treats as 'cannot prove'."""
-        import json
-        import os
-        import shutil
-
-        import pyarrow.parquet as pq
-        import pytest as _pytest
-
-        from deepseek_ocr_2_spark.operators import simsearch
-
-        from .conftest import SF_SMALL
-
-        idx = str(tmp_path / "ann_idx")
-        simsearch.build_ann_index(spark, SF_SMALL, idx)
-        meta_path = os.path.join(idx, "_ann_meta.json")
-        meta = json.load(open(meta_path))
-
-        # (a) sidecar predating fingerprinting
-        old = {k: v for k, v in meta.items() if k != "fingerprint"}
-        json.dump(old, open(meta_path, "w"))
-        with _pytest.raises(ValueError, match="predates"):
-            simsearch.lsh_ann_topk_indexed(spark, SF_SMALL, idx)
-
-        # (b) sidecar whose build-time corpus had no vec_id stats
-        none_fp = dict(meta, fingerprint=dict(meta["fingerprint"], max_vec_id=None))
-        json.dump(none_fp, open(meta_path, "w"))
-        with _pytest.raises(ValueError, match="statistics"):
-            simsearch.lsh_ann_topk_indexed(spark, SF_SMALL, idx)
-        json.dump(meta, open(meta_path, "w"))
-
-        # (b') LIVE corpus without footer statistics: rewrite the
-        # embeddings table with statistics disabled and point the
-        # indexed query at it — must fail closed on 'no statistics',
-        # not fall through to a rows+bytes comparison
-        statless = tmp_path / "statless_sf"
-        statless.mkdir()
-        tbl = pq.read_table(os.path.join(SF_SMALL, "embeddings.parquet"))
-        pq.write_table(
-            tbl,
-            str(statless / "embeddings.parquet"),
-            write_statistics=False,
-        )
-        from deepseek_ocr_2_spark.operators.simsearch import _corpus_fingerprint
-
-        assert _corpus_fingerprint(str(statless))["max_vec_id"] is None
-        with _pytest.raises(ValueError, match="statistics"):
-            simsearch.lsh_ann_topk_indexed(spark, str(statless), idx)
-        shutil.rmtree(statless)
-
-    def test_parquet_column_max_rejects_non_integer_columns(self):
-        """ADVICE r05: string/binary parquet min/max may be truncated
-        by the writer, so the footer fold is only exact for integer
-        physical types — a string-column caller must fail loudly."""
-        import pytest as _pytest
-
-        from deepseek_ocr_2_spark.sources.stats import parquet_column_max
-
-        from .conftest import SF_SMALL
-
-        assert parquet_column_max(SF_SMALL, "embeddings", "vec_id") == 499
-        with _pytest.raises(TypeError, match="physical type"):
-            parquet_column_max(SF_SMALL, "documents", "text")
-
-    def test_indexed_query_bucket_matches_index_row(self, spark, tmp_path):
-        """The driver-side query-bucket computation must agree with the
-        bucket the INDEX itself stored for the query vector — the real
-        end-to-end pin of the one-code-path invariant (ADVICE r04; the
-        first attempt at this test compared the gemm with itself and
-        pinned nothing — code review r05).  Structurally the invariant
-        now holds by construction (_bucket_keys is the single
-        definition); this test catches any future fork of the two call
-        sites."""
-        import json
-        import os
-
-        import numpy as np
-        import pyarrow.dataset as pads
-
-        from deepseek_ocr_2_spark.operators import simsearch
-
-        from .conftest import SF_SMALL
-
-        idx = str(tmp_path / "ann_idx")
-        simsearch.build_ann_index(spark, SF_SMALL, idx)
-        meta = json.load(open(os.path.join(idx, "_ann_meta.json")))
-
-        # the index's stored bucket for the query vector
-        tbl = pads.dataset(idx, format="parquet").to_table(
-            filter=pads.field("vec_id") == simsearch.QUERY_VEC_ID
-        )
-        stored = tbl.column("bucket").to_pylist()
-        assert len(stored) == 1
-
-        # the driver-side recomputation lsh_ann_topk_indexed performs
-        emb = simsearch.load(spark, SF_SMALL, "embeddings")
-        qvec = np.asarray(
-            emb.filter(
-                simsearch.F.col("vec_id") == simsearch.QUERY_VEC_ID
-            ).select("embedding").collect()[0]["embedding"],
-            dtype=np.float64,
-        )
-        planes = simsearch._hyperplanes(len(qvec), meta["n_planes"])
-        qbits = simsearch._bucket_keys(qvec[None, :], planes)[0]
-        assert qbits == stored[0]
+    assert parquet_column_max(SF_SMALL, "embeddings", "vec_id") == 499
+    with _pytest.raises(TypeError, match="physical type"):
+        parquet_column_max(SF_SMALL, "documents", "text")
 
 
 def test_planted_embeddings_id_collision_guard(spark, tmp_path):

@@ -1,9 +1,6 @@
 """HTML main-content extraction tests (FIXTURES.md §4 cases)."""
 
-from deepseek_ocr_2_spark.functions.htmlmain import (
-    extract_main_content,
-    parse_blocks,
-)
+from deepseek_ocr_2_spark.functions.htmlmain import extract_main_content
 
 ARTICLE = """
 <html><head><title>t</title><script>var x = "ignore me";</script>

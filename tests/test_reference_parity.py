@@ -20,10 +20,8 @@ from hypothesis import strategies as st
 from deepseek_ocr_2_spark.functions.assemble import process_page
 from deepseek_ocr_2_spark.functions.refparse import (
     EOS_TOKEN,
-    clean_output,
     convert_coordinates,
     extract_refs_with_content,
-    replace_image_refs,
 )
 
 REF_PATH = "/root/reference/deepseek_ocr2_api/processors/postprocess.py"
